@@ -6,6 +6,7 @@ recall floor."""
 import pytest
 from pyspark.sql import functions as F
 
+from vectorsearch_rbac_spark.functions import vector as V
 from vectorsearch_rbac_spark.sources import load_table
 from vectorsearch_rbac_spark.rbac import derive
 from vectorsearch_rbac_spark.operators import knn, ivf, ann, dynamic, partitioning
@@ -1234,28 +1235,88 @@ def test_role_churn_search_exact_and_delete_semantics(t, spark):
     assert pred.count() == truth.count() > 0
 
 
+_EXPR_DIST = {
+    "l2": V.l2_distance,
+    "cosine": V.cosine_distance,
+    "ip": V.neg_inner_product,
+    "l1": V.l1_distance,
+}
+
+
+def _expr_topk(pairs, k, metric="l2"):
+    """Test-only expression reference: ``F.round`` of the codegen'd
+    distance over (query, block) pair rows, then the exact window top-k —
+    the arithmetic and tie order the DuckDB oracle replays in SQL."""
+    scored = pairs.select(
+        "query_id", "block_id", "document_id",
+        F.round(_EXPR_DIST[metric]("vector", "query_vector"), 6).alias("distance"),
+    )
+    return knn.topk_per_query(scored, k).select(
+        "query_id", "block_id", "document_id", "distance", "rank"
+    )
+
+
+def _qdocs(query_roles, pa):
+    return query_roles.join(pa, "role_id").select("query_id", "document_id").distinct()
+
+
+def _ref_permitted(blocks, queries, query_roles, pa, k=10, metric="l2"):
+    """Exact permitted top-k: user roles → permitted docs → blocks."""
+    pairs = blocks.join(_qdocs(query_roles, pa), "document_id").join(
+        queries.select("query_id", "query_vector"), "query_id"
+    )
+    return _expr_topk(pairs, k, metric)
+
+
+def _ref_postfilter(blocks, queries, query_roles, pa, k=10, expansion=4, metric="l2"):
+    """Global top-(k·expansion) ignoring permissions, then the permission
+    filter, then top-k."""
+    glob = _expr_topk(
+        blocks.crossJoin(queries.select("query_id", "query_vector")), k * expansion, metric
+    ).drop("rank")
+    kept = glob.join(_qdocs(query_roles, pa), ["query_id", "document_id"])
+    return knn.topk_per_query(kept, k).select(
+        "query_id", "block_id", "document_id", "distance", "rank"
+    )
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _assert_matches(got_df, want_df, label=""):
+    got, want = _rows(got_df), _rows(want_df)
+    assert len(want) > 0, label
+    assert got == want, label
+
+
 def test_prefilter_numpy_kernel_matches_expr(t):
-    """The gather-kernel pre-cut (knn_prefilter impl="numpy") must return
-    EXACTLY the expression plan's rows — same permitted join, same rounded
-    distances, same (distance, block_id) tie order."""
+    """knn_prefilter's masked kernel returns EXACTLY the expression
+    reference's rows — same permitted set, same rounded distances, same
+    (distance, block_id) tie order — for every metric."""
     args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    a = sorted(map(tuple, knn.knn_prefilter(*args, k=10).collect()))
-    b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    for metric in ("l2", "cosine", "ip", "l1"):
+        _assert_matches(knn.knn_prefilter(*args, k=10, metric=metric),
+                        _ref_permitted(*args, k=10, metric=metric), metric)
 
 
 def test_postfilter_numpy_kernel_matches_expr(t):
-    """knn_postfilter impl="numpy" (local_topk global phase) ≡ expr,
-    for every metric (the r10 gate-widening pin)."""
-    args2 = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    for metric in ("cosine", "l1", "ip"):
-        a = sorted(map(tuple, knn.knn_postfilter(*args2, k=10, expansion=4, metric=metric).collect()))
-        b = sorted(map(tuple, knn.knn_postfilter(*args2, k=10, expansion=4, metric=metric, impl="numpy").collect()))
-        assert a == b and len(a) > 0, metric
+    """knn_postfilter (local_topk global phase) ≡ the postfilter
+    expression reference, for every metric (the r10 gate-widening pin)."""
     args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    a = sorted(map(tuple, knn.knn_postfilter(*args, k=10, expansion=4).collect()))
-    b = sorted(map(tuple, knn.knn_postfilter(*args, k=10, expansion=4, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    for metric in ("l2", "cosine", "l1", "ip"):
+        _assert_matches(knn.knn_postfilter(*args, k=10, expansion=4, metric=metric),
+                        _ref_postfilter(*args, k=10, expansion=4, metric=metric), metric)
+
+
+def test_impl_keyword_is_compat_only(t):
+    """``impl`` survives only on the four functions older callers pass it
+    to: "numpy" is accepted, anything else raises."""
+    args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
+    for fn in (knn.knn_prefilter, knn.knn_postfilter, knn.knn_comb_role_partition, knn.knn_qdtree):
+        with pytest.raises(ValueError, match="impl="):
+            fn(*args, k=10, impl="expr")
+    _assert_matches(knn.knn_prefilter(*args, k=10, impl="numpy"), _ref_permitted(*args, k=10))
 
 
 def test_l2_bruteforce_numpy_kernel_matches_expr(t):
@@ -1295,33 +1356,30 @@ def test_int8_numpy_kernel_matches_expr(t):
 
 
 def test_role_family_numpy_kernels_match_expr(t, spark):
-    """Every role-partition-family strategy's gather-kernel path
-    (impl="numpy", grouped pre-cut where the strategy has a local window)
-    must return EXACTLY the expression plan's rows."""
+    """Every role-partition-family strategy's gather-kernel path (grouped
+    pre-cut where the strategy has a local window) and RLS's mask path
+    return EXACTLY the permitted expression reference's rows."""
     args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    for fn, kw in (
-        (knn.knn_role_partition, {}),
-        (knn.knn_role_partition_logical, {}),
-        (knn.knn_comb_role_partition, {}),
-        (knn.knn_rls, {}),
+    want = _ref_permitted(*args, k=10)
+    for fn in (
+        knn.knn_role_partition,
+        knn.knn_role_partition_logical,
+        knn.knn_comb_role_partition,
+        knn.knn_rls,
     ):
-        a = sorted(map(tuple, fn(*args, k=10, **kw).collect()))
-        b = sorted(map(tuple, fn(*args, k=10, impl="numpy", **kw).collect()))
-        assert a == b and len(a) > 0, fn.__name__
+        _assert_matches(fn(*args, k=10), want, fn.__name__)
 
 
 def test_qdtree_mask_kernel_matches_expr(t):
-    """knn_qdtree impl="numpy" (leaf-pruned scan → Q-bit masked local_topk)
-    must return EXACTLY the expression plan's rows — the r10 plan-shape fix
-    for the last strategy that replicated the vector payload per
-    (query, permitted block)."""
+    """knn_qdtree (leaf-pruned scan → Q-bit masked local_topk) returns
+    EXACTLY the permitted expression reference's rows: leaf routing only
+    drops leaves with no permitted doc."""
     args = (t["queries"], t["query_roles"], t["permission_assignment"])
     assigned = partitioning.qdtree_assignment(
         t["documentblocks"], t["permission_assignment"], max_leaf_size=64, max_depth=4
     )
-    a = sorted(map(tuple, knn.knn_qdtree(assigned, *args, k=10).collect()))
-    b = sorted(map(tuple, knn.knn_qdtree(assigned, *args, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    _assert_matches(knn.knn_qdtree(assigned, *args, k=10),
+                    _ref_permitted(t["documentblocks"], *args, k=10))
 
 
 def test_local_topk_query_chunking_row_identical(t):
@@ -1354,7 +1412,7 @@ def test_stale_doc_masks_fail_loudly(t):
     with pytest.raises(Exception, match="qmask word count"):
         knn.knn_prefilter(
             blocks, qs, t["query_roles"], t["permission_assignment"],
-            k=5, impl="numpy", doc_masks=stale,
+            k=5, doc_masks=stale,
         ).collect()
     # same word count but a DIFFERENT query-id set: the per-row query-set
     # fingerprint must catch what the word count cannot
@@ -1364,14 +1422,15 @@ def test_stale_doc_masks_fail_loudly(t):
     with pytest.raises(Exception, match="query-set hash"):
         knn.knn_prefilter(
             blocks, qs, t["query_roles"], t["permission_assignment"],
-            k=5, impl="numpy", doc_masks=wrongset,
+            k=5, doc_masks=wrongset,
         ).collect()
 
 
 def test_mask_kernel_multiword_parity(t, spark):
     """Kernel parity at Q=70 — the fixture workload has Q<64, so the
     multi-word mask unpack (2 packed longs per row, including bit 63 =
-    the SIGN bit of the first word) is otherwise never pinned ≡ expr."""
+    the SIGN bit of the first word) is otherwise never pinned against the
+    expression reference."""
     qs = (
         t["queries"]
         .crossJoin(F.broadcast(spark.range(14).select(F.col("id").alias("r"))))
@@ -1390,9 +1449,9 @@ def test_mask_kernel_multiword_parity(t, spark):
     )
     assert qs.count() == 70
     args = (t["documentblocks"], qs, qroles, t["permission_assignment"])
-    a = sorted(map(tuple, knn.knn_prefilter(*args, k=10).collect()))
-    b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    want = _ref_permitted(*args, k=10)
+    for fn in (knn.knn_prefilter, knn.knn_rls):
+        _assert_matches(fn(*args, k=10), want, fn.__name__)
 
 
 def test_doc_masks_persist_roundtrip(t, spark, tmp_path):
@@ -1405,14 +1464,16 @@ def test_doc_masks_persist_roundtrip(t, spark, tmp_path):
     path = str(tmp_path / "doc_masks")
     masks.write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
-    a = sorted(map(tuple, knn.knn_prefilter(*args, k=10, impl="numpy").collect()))
-    b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, impl="numpy", doc_masks=reloaded).collect()))
+    a = sorted(map(tuple, knn.knn_prefilter(*args, k=10).collect()))
+    b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, doc_masks=reloaded).collect()))
     assert a == b and len(a) > 0
 
 
 def test_role_routed_numpy_kernel_matches_expr(t, spark):
-    """dynamic.knn_role_routed impl="numpy" (per-(query, partition)
-    gather pre-cut) ≡ expr on a 5-partition role store."""
+    """dynamic.knn_role_routed (per-(query, partition) gather pre-cut)
+    over a 5-partition role store ≡ the permitted expression reference:
+    every fixture query role (all < 10) is routed to the partition that
+    holds all of its documents, so routing loses nothing."""
     blocks, pa, qs, qr = (
         t["documentblocks"], t["permission_assignment"], t["queries"], t["query_roles"]
     )
@@ -1424,9 +1485,9 @@ def test_role_routed_numpy_kernel_matches_expr(t, spark):
         blocks.join(pa, "document_id").join(F.broadcast(pr), "role_id")
         .select("partition_id", "block_id", "document_id", "vector").distinct()
     )
-    a = sorted(map(tuple, dynamic.knn_role_routed(store, pr, qs, qr, pa, k=10).collect()))
-    b = sorted(map(tuple, dynamic.knn_role_routed(store, pr, qs, qr, pa, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    assert qr.where(F.col("role_id") >= 10).count() == 0
+    _assert_matches(dynamic.knn_role_routed(store, pr, qs, qr, pa, k=10),
+                    _ref_permitted(blocks, qs, qr, pa, k=10))
 
 
 def test_gather_kernel_ip_and_zero_norm_cosine_parity(t, spark):
@@ -1436,9 +1497,8 @@ def test_gather_kernel_ip_and_zero_norm_cosine_parity(t, spark):
     pandas→Arrow NaN→null mask would otherwise rank it first)."""
     args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
     for metric in ("ip", "l1"):
-        a = sorted(map(tuple, knn.knn_prefilter(*args, k=10, metric=metric).collect()))
-        b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, metric=metric, impl="numpy").collect()))
-        assert a == b and len(a) > 0, metric
+        _assert_matches(knn.knn_comb_role_partition(*args, k=10, metric=metric),
+                        _ref_permitted(*args, k=10, metric=metric), metric)
     # synthetic zero-norm row: it must never beat a real neighbor
     dim = len(t["queries"].select("query_vector").first()[0])
     blocks = t["documentblocks"].limit(20).select(
@@ -1448,11 +1508,9 @@ def test_gather_kernel_ip_and_zero_norm_cosine_parity(t, spark):
     ))
     q = t["queries"].limit(3)
     joined = blocks.crossJoin(F.broadcast(q.select("query_id")))
-    a = sorted(map(tuple, knn.topk_per_query(
-        joined.join(F.broadcast(q.select("query_id", "query_vector")), "query_id")
-        .select("query_id", "block_id", "document_id",
-                F.round(__import__("vectorsearch_rbac_spark.functions.vector", fromlist=["cosine_distance"]).cosine_distance("vector", "query_vector"), 6).alias("distance")),
-        25).collect()))
+    a = _rows(_expr_topk(
+        joined.join(F.broadcast(q.select("query_id", "query_vector")), "query_id"),
+        25, "cosine"))
     b = sorted(map(tuple, knn.topk_per_query(
         knn._gather_local_topk(joined, q, 25, metric="cosine"), 25).collect()))
     assert len(a) == len(b) == 3 * 21
@@ -1578,3 +1636,124 @@ def test_adaptive_entry_cost4_sections_cover_live_arms(spark, sf_dir):
     assert {s for _, s in arms} == {"postfilter", "acorn", "qdtree"}
     assert {s for sec, s in arms if sec == "cost4"} == {"postfilter", "qdtree"}
     assert {s for sec, s in arms if sec == "cost4gen"} == {"acorn", "qdtree"}
+
+
+@pytest.fixture(scope="module")
+def edge(t, spark):
+    """Edge workload over the t fixture's corpus and permissions.
+
+    - every fixture query, with its user's roles;
+    - a query whose user holds NO roles (no query_roles / user_roles rows);
+    - a TIE query: a copy of the first query (same user, same roles) whose
+      vector equals a block B0 its user may read; B0 is duplicated twice
+      under fresh block ids with the same document, so three permitted
+      blocks sit at distance 0 and a k=2 cut must keep the two smallest
+      block ids.
+    """
+    pa, qs, qr = t["permission_assignment"], t["queries"], t["query_roles"]
+    base = t["documentblocks"]
+    q0 = qs.orderBy("query_id").first()
+    roles0 = {r["role_id"] for r in qr.where(F.col("query_id") == q0["query_id"]).collect()}
+    docs0 = {r["document_id"] for r in pa.where(F.col("role_id").isin(list(roles0))).collect()}
+    b0 = base.where(F.col("document_id").isin(list(docs0))).orderBy("block_id").first()
+    top = base.agg(F.max("block_id")).first()[0]
+    dups = [
+        base.where(F.col("block_id") == b0["block_id"]).withColumn("block_id", F.lit(top + i).cast("long"))
+        for i in (1, 2)
+    ]
+    blocks = base.unionByName(dups[0]).unionByName(dups[1]).cache()
+    qmax = qs.agg(F.max("query_id")).first()[0]
+    umax = t["user_roles"].agg(F.max("user_id")).first()[0]
+    no_role, tie = qmax + 1, qmax + 2
+    extra = spark.createDataFrame(
+        [(no_role, umax + 1, list(b0["vector"])), (tie, q0["user_id"], list(b0["vector"]))],
+        qs.select("query_id", "user_id", "query_vector").schema,
+    )
+    queries = qs.select("query_id", "user_id", "query_vector").unionByName(extra).cache()
+    rtype = qr.schema["role_id"].dataType.simpleString()
+    qroles = qr.unionByName(
+        spark.createDataFrame([(tie, int(r)) for r in roles0], f"query_id long, role_id {rtype}")
+    ).cache()
+    return {
+        "blocks": blocks, "queries": queries, "query_roles": qroles, "pa": pa,
+        "user_roles": t["user_roles"], "no_role": no_role, "tie": tie,
+        "tie_ids": [b0["block_id"], top + 1],
+    }
+
+
+def _edge_search(name, e, spark):
+    """name → fn(k) running that strategy over the edge workload."""
+    from vectorsearch_rbac_spark.operators import layout
+    from vectorsearch_rbac_spark.plans import strategy
+
+    b, q, qr, pa = e["blocks"], e["queries"], e["query_roles"], e["pa"]
+    if name in ("knn_prefilter", "knn_postfilter", "knn_role_partition",
+                "knn_role_partition_logical", "knn_comb_role_partition", "knn_rls"):
+        return lambda k: getattr(knn, name)(b, q, qr, pa, k=k)
+    if name == "knn_qdtree":
+        assigned = partitioning.qdtree_assignment(b, pa, max_leaf_size=64, max_depth=4)
+        return lambda k: knn.knn_qdtree(assigned, q, qr, pa, k=k)
+    if name == "knn_role_routed":
+        pr = spark.createDataFrame(
+            [(p, r) for p in range(5) for r in (2 * p, 2 * p + 1)], "partition_id long, role_id int"
+        )
+        store = (
+            b.join(pa, "document_id").join(F.broadcast(pr), "role_id")
+            .select("partition_id", "block_id", "document_id", "vector").distinct()
+        )
+        return lambda k: dynamic.knn_role_routed(store, pr, q, qr, pa, k=k)
+    if name == "knn_budget":
+        from vectorsearch_rbac_spark.rbac import derive
+
+        sel = derive.block_selectivity(e["user_roles"], pa, b)
+        opt = layout.optimize_layout(b, pa, q, e["user_roles"], selectivity=sel, alpha=1.5)
+        store = layout.build_budget_store(b, pa, opt["assignment"])
+        return lambda k: layout.knn_budget(store, q, qr, opt["routing"], opt["assignment"], k=k)
+    if name == "knn_dynamic":
+        store = dynamic.build_store(b, pa)
+        return lambda k: dynamic.knn_dynamic(store, q, qr, k=k)
+    if name == "adaptive_knn":
+        return lambda k: strategy.adaptive_knn(b, q, qr, pa, e["user_roles"], k=k, routing_mode="cost")
+    raise KeyError(name)
+
+
+@pytest.mark.parametrize("name", [
+    "knn_prefilter", "knn_postfilter", "knn_role_partition", "knn_role_partition_logical",
+    "knn_comb_role_partition", "knn_rls", "knn_qdtree", "knn_role_routed", "knn_budget",
+    "knn_dynamic", "adaptive_knn",
+])
+def test_access_contract_edge_cases(edge, spark, name):
+    """The access contract on its edge cases, for every RBAC strategy:
+    a user with no roles gets 0 rows (no crash); with k above every
+    user's permitted block count the result is EXACTLY the permitted
+    blocks; duplicate vectors tied at the cut resolve by block_id; and no
+    returned (query, document) pair falls outside the user's roles."""
+    search = _edge_search(name, edge, spark)
+    roles: dict = {}
+    for r in edge["query_roles"].collect():
+        roles.setdefault(r["query_id"], set()).add(r["role_id"])
+    role_docs: dict = {}
+    for r in edge["pa"].collect():
+        role_docs.setdefault(r["role_id"], set()).add(r["document_id"])
+    block_doc = {r["block_id"]: r["document_id"] for r in edge["blocks"].select("block_id", "document_id").collect()}
+    qids = [r["query_id"] for r in edge["queries"].select("query_id").collect()]
+    allowed = {q: set().union(*(role_docs.get(x, set()) for x in roles.get(q, ()))) for q in qids}
+
+    def check(rows):
+        assert len({(r["query_id"], r["block_id"]) for r in rows}) == len(rows), "duplicate result rows"
+        for r in rows:
+            assert r["document_id"] in allowed[r["query_id"]], ("leak", r)
+            assert block_doc[r["block_id"]] == r["document_id"]
+        assert not [r for r in rows if r["query_id"] == edge["no_role"]]
+
+    k_big = len(block_doc) + 5
+    rows = search(k_big).collect()
+    check(rows)
+    for q in qids:
+        want = {b for b, d in block_doc.items() if d in allowed[q]}
+        assert {r["block_id"] for r in rows if r["query_id"] == q} == want, q
+
+    rows = search(2).collect()
+    check(rows)
+    tie = sorted((r["block_id"], r["distance"]) for r in rows if r["query_id"] == edge["tie"])
+    assert tie == [(b, 0.0) for b in edge["tie_ids"]]

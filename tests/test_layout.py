@@ -141,16 +141,17 @@ def test_scan_plan_prefers_dedicated_partitions(t, opt):
 
 
 def test_knn_budget_numpy_kernel_matches_expr(t, opt):
-    """knn_budget impl="numpy" (gather-kernel pre-cut over the scan-plan
-    pairs) ≡ the expression plan row-for-row."""
+    """knn_budget (gather-kernel pre-cut over the scan-plan pairs) ≡ the
+    permitted expression reference row-for-row, for every metric."""
+    from test_knn import _assert_matches, _ref_permitted
+
     store = layout.build_budget_store(
         t["documentblocks"], t["permission_assignment"], opt["assignment"]
     )
-    a = sorted(map(tuple, layout.knn_budget(
-        store, t["queries"], t["query_roles"], opt["routing"], opt["assignment"], k=10
-    ).collect()))
-    b = sorted(map(tuple, layout.knn_budget(
-        store, t["queries"], t["query_roles"], opt["routing"], opt["assignment"], k=10,
-        impl="numpy",
-    ).collect()))
-    assert a == b and len(a) > 0
+    args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
+    for metric in ("l2", "cosine", "ip", "l1"):
+        _assert_matches(
+            layout.knn_budget(store, t["queries"], t["query_roles"], opt["routing"],
+                              opt["assignment"], k=10, metric=metric),
+            _ref_permitted(*args, k=10, metric=metric), metric,
+        )

@@ -28,7 +28,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .knn import _METRICS, topk_per_query
+from ..functions import vector as V
+from .knn import topk_per_query
+
+_METRICS = {
+    "l2": V.l2_distance,
+    "cosine": V.cosine_distance,
+    "ip": V.neg_inner_product,
+    "l1": V.l1_distance,
+}
 
 
 def _doc_comb(permission_assignment: DataFrame) -> DataFrame:
@@ -588,7 +596,6 @@ def knn_role_routed(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
 ) -> DataFrame:
     """Search the role-churned store: each query scans only the partitions
     whose role set intersects its roles, applies the row-level permission
@@ -599,7 +606,7 @@ def knn_role_routed(
     query role lives in at least one routed partition (insert adds the
     new role's docs to its routed partition; delete only removes docs no
     remaining role of that partition needs)."""
-    from pyspark.sql import Window
+    from .knn import _gather_local_topk, _role_merge
 
     routed = (
         F.broadcast(query_roles)
@@ -617,29 +624,5 @@ def knn_role_routed(
         store.join(F.broadcast(routed), "partition_id")
         .join(qdocs.hint("SHUFFLE_HASH"), ["query_id", "document_id"], "left_semi")
     )
-    if impl == "numpy":
-        from .knn import _gather_local_topk
-
-        scored = _gather_local_topk(
-            visible, queries, k, metric, group_col="partition_id"
-        )
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            visible
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "partition_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
-    w_local = Window.partitionBy("query_id", "partition_id").orderBy(
-        F.col("distance").asc(), F.col("block_id").asc()
-    )
-    local = scored.withColumn("lr", F.row_number().over(w_local)).where(F.col("lr") <= k)
-    dedup = local.groupBy("query_id", "block_id", "document_id").agg(
-        F.min("distance").alias("distance")
-    )
-    return topk_per_query(dedup, k).select(
-        "query_id", "block_id", "document_id", "distance", "rank"
-    )
+    scored = _gather_local_topk(visible, queries, k, metric, group_col="partition_id")
+    return _role_merge(scored, k, "partition_id")

@@ -12,11 +12,13 @@ every strategy answers all queries in one distributed plan.
 Scale design (100 TB blocks table, ~10³ queries):
 - queries + their role sets are broadcast (dim-sized);
 - permission tables are broadcast when small, else semi-joined on doc_id;
-- distance math is codegen'd column expressions (functions/vector.py);
-- top-k is two-phase: ``local_topk`` reduces each scan partition to ≤ Q×k
-  rows with Arrow-batched numpy (BLAS matmul), then a global window over
-  the P×Q×k survivors. The exact (window-only) variants exist for oracle
-  parity and small inputs.
+- each strategy has ONE implementation: an Arrow-batched numpy kernel
+  (``local_topk`` for scan-shaped strategies, ``_gather_local_topk`` for
+  pre-joined (query, block) rows) that folds distances in the j-order of
+  the column expressions in functions/vector.py and rounds to 6 dp like
+  ``F.round``, so the DuckDB oracle's SQL replays every result;
+- top-k is two-phase: the kernel reduces each scan partition to ≤ Q×k
+  rows, then a global window over the P×Q×k survivors.
 """
 
 from __future__ import annotations
@@ -27,16 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import vector as V
 from . import hints
-
-
-_METRICS = {
-    "l2": V.l2_distance,
-    "cosine": V.cosine_distance,
-    "ip": V.neg_inner_product,
-    "l1": V.l1_distance,
-}
 
 
 def topk_per_query(scored: DataFrame, k: int, dist_col: str = "distance", id_col: str = "block_id") -> DataFrame:
@@ -70,23 +63,40 @@ def _rel_est_bytes(rel: DataFrame, bytes_per_row: int) -> int:
     return int(n) * bytes_per_row
 
 
-def _permitted_blocks(blocks: DataFrame, query_roles: DataFrame, permission_assignment: DataFrame) -> DataFrame:
-    """query_id × permitted block rows.
+def _check_impl(impl: str) -> None:
+    """``impl`` survives only so callers that still pass ``impl="numpy"``
+    keep working; the kernel is the one implementation."""
+    if impl != "numpy":
+        raise ValueError(f"impl={impl!r}: the numpy kernel is the only implementation")
 
-    Mirrors the reference prefilter CTE (common_function.py:112-121):
-    user roles → DISTINCT permitted docs → blocks. Both RBAC relations are
-    dim-sized → broadcast; the blocks fact table streams through.
-    """
-    qdocs = (
-        F.broadcast(query_roles)
-        # gated (r12): perm is docs×roles, qdocs is Q×permitted-docs — both
-        # doc-cardinality; above the gate the blocks join shuffles on
-        # document_id (bucketable) instead of aborting on the 8 GB ceiling
-        .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
-        .select("query_id", "document_id")
-        .distinct()
+
+def _masked_topk(
+    blocks: DataFrame,
+    queries: DataFrame,
+    query_roles: DataFrame,
+    permission_assignment: DataFrame,
+    k: int,
+    metric: str,
+    doc_masks: DataFrame | None,
+) -> DataFrame:
+    """Stage-1 of the mask-kernel strategies (prefilter, RLS, qd-tree):
+    join the Q-bit mask table into ``blocks`` and run the masked
+    ``local_topk``. The query frame is collected ONCE here; the sorted
+    ids, the query-set hash and the query count all derive from those
+    rows, so a fresh batch costs one collect job and no stat-cache
+    entry."""
+    q_rows = _collect_queries(queries)
+    masks = (
+        doc_masks if doc_masks is not None
+        else _query_doc_masks(
+            queries, query_roles, permission_assignment,
+            qids=sorted({r["query_id"] for r in q_rows}),
+        )
     )
-    return blocks.join(hints.gated_broadcast(qdocs, _rel_est_bytes(qdocs, 32)), "document_id")
+    return _local_topk(
+        _join_masks(blocks, masks, len(q_rows), permission_assignment),
+        q_rows, k, metric, mask_col="qmask",
+    )
 
 
 def knn_prefilter(
@@ -96,7 +106,7 @@ def knn_prefilter(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
+    impl: str = "numpy",
     doc_masks: DataFrame | None = None,
 ) -> DataFrame:
     """Prefilter strategy: restrict to permitted blocks, then exact top-k.
@@ -105,39 +115,19 @@ def knn_prefilter(
     resolve accessible document_ids, then ``ORDER BY vector <-> q LIMIT k``
     over them. Recall = 1.0 by construction.
 
-    ``impl='numpy'`` runs the permission predicate AS DATA: a per-doc
-    query-BITMASK column (Q bits ≈ Q/8 bytes, :func:`_query_doc_masks`)
-    broadcast-joins the blocks scan ONCE, and the masked ``local_topk``
-    kernel scores each batch against the whole query matrix with the
-    expression folds' j-order, excluding masked pairs from the per-batch
-    cut — so the scan streams each vector exactly once instead of the
-    expr plan's per-(query, permitted-block) join that replicates the
-    vector payload per query. Same rows (pytest-pinned ≡ expr; the
-    sf0.01 oracle replays the expr form). ``doc_masks`` accepts a
-    PREBUILT mask table (:func:`_query_doc_masks` output, checkpointed
-    per workload) — the build-once/search-many contract every other
-    offline index artifact here follows.
+    The permission predicate runs AS DATA: a per-doc query-BITMASK column
+    (Q bits ≈ Q/8 bytes, :func:`_query_doc_masks`) broadcast-joins the
+    blocks scan ONCE, and the masked ``local_topk`` kernel scores each
+    batch against the whole query matrix, excluding masked pairs from the
+    per-batch cut — so the scan streams each vector exactly once instead
+    of replicating the vector payload per (query, permitted block).
+    ``doc_masks`` accepts a PREBUILT mask table (:func:`_query_doc_masks`
+    output, checkpointed per workload) — the build-once/search-many
+    contract every other offline index artifact here follows. ``impl``
+    is a compatibility keyword (:func:`_check_impl`).
     """
-    if impl == "numpy":
-        masks = (
-            doc_masks if doc_masks is not None
-            else _query_doc_masks(queries, query_roles, permission_assignment)
-        )
-        scored = local_topk(
-            _join_masks(blocks, masks, queries, permission_assignment),
-            queries, k, metric, mask_col="qmask",
-        )
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            _permitted_blocks(blocks, query_roles, permission_assignment)
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )  # prune the vectors BEFORE the rank shuffle: the window exchange
-            # must move (id, distance) rows, never the embedding arrays
-        )
+    _check_impl(impl)
+    scored = _masked_topk(blocks, queries, query_roles, permission_assignment, k, metric, doc_masks)
     return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
 
 
@@ -149,7 +139,7 @@ def knn_postfilter(
     k: int = 10,
     expansion: int = 4,
     metric: str = "l2",
-    impl: str = "expr",
+    impl: str = "numpy",
 ) -> DataFrame:
     """Postfilter strategy: global top-(k·expansion) ignoring permissions,
     then drop unpermitted rows, keep ≤ k.
@@ -159,34 +149,20 @@ def knn_postfilter(
     user's permitted blocks are sparse among global neighbors (the
     selectivity trade-off the reference benchmarks).
 
-    ``impl='numpy'`` runs the global phase two-phase (``local_topk``'s
-    Arrow/BLAS per-batch pre-cut — the hash-green ``rbac_layouts`` kernel),
-    so the unpermissioned scan emits P·Q·(k·expansion) rows instead of
-    N·Q; the permission join and final top-k are unchanged. All four
-    metrics route through the kernel (r10 — ``local_topk`` grew exact l1
-    and NaN-sorts-last cosine branches in r9, so the old l2/ip gate was
-    stale); pytest pins every metric ≡ expr.
+    The global phase is two-phase (``local_topk``'s Arrow/BLAS per-batch
+    pre-cut), so the unpermissioned scan emits P·Q·(k·expansion) rows
+    instead of N·Q; all four metrics route through the kernel. ``impl``
+    is a compatibility keyword (:func:`_check_impl`).
     """
-    if impl == "numpy":
-        global_topk = topk_per_query(
-            local_topk(blocks, queries, k * expansion, metric), k * expansion
-        ).drop("rank")
-    else:
-        dist = _METRICS[metric]
-        global_topk = topk_per_query(
-            blocks.join(F.broadcast(queries.select("query_id", "query_vector")), how="cross")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            ),
-            k * expansion,
-        ).drop("rank")
-
+    _check_impl(impl)
+    global_topk = topk_per_query(
+        local_topk(blocks, queries, k * expansion, metric), k * expansion
+    ).drop("rank")
     qdocs = (
         F.broadcast(query_roles)
-        # gated (r12): doc-cardinality relations — same reasoning as
-        # _permitted_blocks; the probe side here is only Q·k·expansion
-        # rows, so above the gate Spark auto-broadcasts THAT side instead
+        # gated (r12): doc-cardinality relations; the probe side here is
+        # only Q·k·expansion rows, so above the gate Spark auto-broadcasts
+        # THAT side instead
         .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
         .select("query_id", "document_id")
         .distinct()
@@ -204,7 +180,6 @@ def knn_role_partition(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
 ) -> DataFrame:
     """Role-partition strategy: search each of the user's role partitions
     (blocks × permission on role_id), take per-partition top-k, dedup blocks
@@ -217,9 +192,8 @@ def knn_role_partition(
     ``partitioning.write_role_partitions`` (partitionBy(role_id) → partition
     pruning replaces per-table indexes).
 
-    ``impl='numpy'`` scores the SAME role-replicated rows through the
-    per-(query, role) gather-kernel pre-cut; the local window → dedup →
-    global merge is unchanged. pytest pins ≡ expr.
+    The role-replicated rows are scored through the per-(query, role)
+    gather-kernel pre-cut; the local window → dedup → global merge follows.
     """
     # replicated per role; the perm hint is gated (r12): docs×roles — above
     # the gate this join shuffles on document_id (bucketable)
@@ -228,20 +202,15 @@ def knn_role_partition(
         "document_id",
     )
     routed = role_blocks.join(F.broadcast(query_roles), "role_id")
-    if impl == "numpy":
-        scored = _gather_local_topk(routed, queries, k, metric, group_col="role_id")
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            routed
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "role_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
-    # per-(query, role) local top-k bounds the merge input, then dedup + global
-    w_local = Window.partitionBy("query_id", "role_id").orderBy(F.col("distance").asc(), F.col("block_id").asc())
+    scored = _gather_local_topk(routed, queries, k, metric, group_col="role_id")
+    return _role_merge(scored, k, "role_id")
+
+
+def _role_merge(scored: DataFrame, k: int, group_col: str) -> DataFrame:
+    """Per-(query, group) local top-k bounds the merge input, then blocks
+    reachable through several groups dedup to their min distance and the
+    survivors merge to the global top-k."""
+    w_local = Window.partitionBy("query_id", group_col).orderBy(F.col("distance").asc(), F.col("block_id").asc())
     local = scored.withColumn("lr", F.row_number().over(w_local)).where(F.col("lr") <= k)
     dedup = local.groupBy("query_id", "block_id", "document_id").agg(F.min("distance").alias("distance"))
     return topk_per_query(dedup, k).select("query_id", "block_id", "document_id", "distance", "rank")
@@ -254,7 +223,6 @@ def knn_role_partition_logical(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
 ) -> DataFrame:
     """C3-LOGICAL: the reference's pointer-index variant
     (``logical_partition_benchmark/benchmark/src/pointer_hnsw_index.cpp``
@@ -288,20 +256,8 @@ def knn_role_partition_logical(
     fetched = routed.join(
         blocks.select("block_id", "vector").hint("SHUFFLE_HASH"), "block_id"
     )
-    if impl == "numpy":
-        scored = _gather_local_topk(fetched, queries, k, metric, group_col="role_id")
-    else:
-        dist = _METRICS[metric]
-        scored = fetched.join(
-            F.broadcast(queries.select("query_id", "query_vector")), "query_id"
-        ).select(
-            "query_id", "role_id", "block_id", "document_id",
-            F.round(dist("vector", "query_vector"), 6).alias("distance"),
-        )
-    w_local = Window.partitionBy("query_id", "role_id").orderBy(F.col("distance").asc(), F.col("block_id").asc())
-    local = scored.withColumn("lr", F.row_number().over(w_local)).where(F.col("lr") <= k)
-    dedup = local.groupBy("query_id", "block_id", "document_id").agg(F.min("distance").alias("distance"))
-    return topk_per_query(dedup, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    scored = _gather_local_topk(fetched, queries, k, metric, group_col="role_id")
+    return _role_merge(scored, k, "role_id")
 
 
 def knn_comb_role_partition(
@@ -311,7 +267,7 @@ def knn_comb_role_partition(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
+    impl: str = "numpy",
 ) -> DataFrame:
     """Combination-role strategy: one partition per *distinct user role-set*
     (canonical sorted key); each partition holds every block that role-set
@@ -321,8 +277,10 @@ def knn_comb_role_partition(
     ``dynamic_partition/search.py:17`` (CombRolePartitions lookup by
     ``comb_role = sorted(user_roles)``). Results equal prefilter (recall 1.0)
     — the win is single-partition locality, which on disk maps to
-    partitionBy(comb_role) and partition pruning.
+    partitionBy(comb_role) and partition pruning. ``impl`` is a
+    compatibility keyword (:func:`_check_impl`).
     """
+    _check_impl(impl)
     comb = query_roles.groupBy("query_id").agg(
         F.array_join(F.array_sort(F.collect_list(F.col("role_id").cast("string"))), ",").alias("comb_role")
     )
@@ -339,18 +297,7 @@ def knn_comb_role_partition(
         .join(blocks, "document_id")
     )
     routed = part_blocks.join(F.broadcast(comb), "comb_role")
-    if impl == "numpy":
-        scored = _gather_local_topk(routed, queries, k, metric)
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            routed
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
+    scored = _gather_local_topk(routed, queries, k, metric)
     return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
 
 
@@ -361,49 +308,20 @@ def knn_rls(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
     doc_masks: DataFrame | None = None,
 ) -> DataFrame:
     """Row-level-security semantics: the permission predicate is applied at
     the scan (a filtering view), identical results to prefilter.
 
     Parity: ``controller/baseline/pg_row_security/row_level_security.py`` —
-    Postgres RLS policy ``USING (document_id IN (SELECT …))``; in Spark the
-    policy is a semi-join wrapper over the scan. RLS ≡ prefilter semantics
-    (the policy restricts the scan to permitted rows), so ``impl='numpy'``
-    rides the SAME predicate-as-data Q-bit mask kernel as
+    Postgres RLS policy ``USING (document_id IN (SELECT …))``. RLS ≡
+    prefilter semantics (the policy restricts the scan to permitted rows),
+    so it rides the SAME predicate-as-data Q-bit mask kernel as
     :func:`knn_prefilter`: the mask join IS the scan-level policy, applied
     once per row instead of a per-(query, block) cross join that would
-    replicate the vector payload Q times — the 100×-scale shape. pytest
-    pins ≡ expr; the expr form remains the oracle-replayable plan.
+    replicate the vector payload Q times — the 100×-scale shape.
     """
-    if impl == "numpy":
-        masks = (
-            doc_masks if doc_masks is not None
-            else _query_doc_masks(queries, query_roles, permission_assignment)
-        )
-        scored = local_topk(
-            _join_masks(blocks, masks, queries, permission_assignment),
-            queries, k, metric, mask_col="qmask",
-        )
-    else:
-        dist = _METRICS[metric]
-        qdocs = (
-            F.broadcast(query_roles)
-            # gated (r12): doc-cardinality — same reasoning as _permitted_blocks
-            .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
-            .select("query_id", "document_id")
-            .distinct()
-        )
-        # RLS = per-query filtered view of the scan; leftsemi keeps block rows
-        scored = (
-            blocks.join(F.broadcast(queries.select("query_id", "query_vector")), how="cross")
-            .join(hints.gated_broadcast(qdocs, _rel_est_bytes(qdocs, 32)), ["query_id", "document_id"], "leftsemi")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
+    scored = _masked_topk(blocks, queries, query_roles, permission_assignment, k, metric, doc_masks)
     return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
 
 
@@ -414,7 +332,7 @@ def knn_qdtree(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
+    impl: str = "numpy",
     doc_masks: DataFrame | None = None,
 ) -> DataFrame:
     """Qd-tree-partitioned search: route each query to the tree leaves that
@@ -428,74 +346,36 @@ def knn_qdtree(
     the routing join becomes Catalyst partition pruning. Exact (recall 1.0):
     routing only ever removes leaves with zero permitted docs.
 
-    ``impl='numpy'``: leaf pruning stays PARTITION-granular — a broadcast
-    semi-join keeps only leaves holding ≥1 permitted doc for ≥1 query (on
-    disk: partition pruning) — and the per-(query, block) check rides the
-    prefilter family's Q-bit mask kernel instead of an expression join
-    that replicates the vector payload per (query, permitted block). The
-    leaf-routing join already produces exactly the per-query visibility
-    the mask encodes, so rows are pytest-pinned ≡ expr.
+    Leaf pruning is PARTITION-granular — a broadcast semi-join keeps only
+    leaves holding ≥1 permitted doc for ≥1 query (on disk: partition
+    pruning) — and the per-(query, block) check rides the prefilter
+    family's Q-bit mask kernel, so no vector payload is replicated per
+    (query, permitted block). ``impl`` is a compatibility keyword
+    (:func:`_check_impl`).
     """
-    if impl == "numpy":
-        masks = (
-            doc_masks if doc_masks is not None
-            else _query_doc_masks(queries, query_roles, permission_assignment)
-        )
-        # live leaves = partitions holding ≥1 block of ≥1 permitted doc.
-        # r11 (guide §2.4): computed with ONE corpus pass + a broadcast
-        # semi-join + one tiny partition_id distinct, replacing the old
-        # qdocs-distinct → doc_parts-distinct → qparts-distinct chain
-        # (three Exchanges, one of them corpus-sized, to reach the same
-        # set — the per-QUERY routing table the chain built is only
-        # needed by the expression path below). Duplicates on the
-        # semi-join's build side are harmless by semi-join semantics.
-        # both layers gated (r12): the permission relation itself AND the
-        # role-expanded doc list derived from it are doc-cardinality — the
-        # r11 distinct-drop made permitted_docs strictly larger than the
-        # old qdocs build side (ADVICE r11). Above the gate the semi-join
-        # shuffles on document_id (bucketable, the ACORN fallback shape).
-        permitted_docs = (
-            F.broadcast(query_roles)
-            .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
-            .select("document_id")
-        )
-        live_leaves = (
-            assigned_blocks
-            .join(hints.gated_broadcast(permitted_docs, _rel_est_bytes(permitted_docs, 24)), "document_id", "leftsemi")
-            .select("partition_id")
-            .distinct()
-        )
-        scored = local_topk(
-            _join_masks(
-                assigned_blocks
-                .join(F.broadcast(live_leaves), "partition_id", "leftsemi"),  # leaf pruning
-                masks, queries, permission_assignment,
-            ),
-            queries, k, metric, mask_col="qmask",
-        )
-    else:
-        dist = _METRICS[metric]
-        qdocs = (
-            F.broadcast(query_roles)
-            # gated (r12): docs×roles relation — same reasoning as the
-            # masked path above; qdocs itself (Q × permitted docs) is also
-            # doc-cardinality, so its semi-join hint below is gated too
-            .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
-            .select("query_id", "document_id")
-            .distinct()
-        )
-        # per-QUERY leaf routing table: query → partitions with ≥1 permitted doc
-        doc_parts = assigned_blocks.select("document_id", "partition_id").distinct()
-        qparts = qdocs.join(doc_parts, "document_id").select("query_id", "partition_id").distinct()
-        scored = (
-            assigned_blocks.join(F.broadcast(qparts), "partition_id")  # leaf pruning
-            .join(hints.gated_broadcast(qdocs, _rel_est_bytes(qdocs, 32)), ["query_id", "document_id"], "leftsemi")  # per-block check
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
+    _check_impl(impl)
+    # live leaves = partitions holding ≥1 block of ≥1 permitted doc, from
+    # ONE corpus pass + a broadcast semi-join + one tiny partition_id
+    # distinct (r11, guide §2.4) — no per-query routing table; the mask
+    # carries the per-query visibility. Duplicates on the semi-join's
+    # build side are harmless by semi-join semantics. Both layers gated
+    # (r12): the permission relation itself AND the role-expanded doc
+    # list derived from it are doc-cardinality. Above the gate the
+    # semi-join shuffles on document_id (bucketable, the ACORN fallback
+    # shape).
+    permitted_docs = (
+        F.broadcast(query_roles)
+        .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
+        .select("document_id")
+    )
+    live_leaves = (
+        assigned_blocks
+        .join(hints.gated_broadcast(permitted_docs, _rel_est_bytes(permitted_docs, 24)), "document_id", "leftsemi")
+        .select("partition_id")
+        .distinct()
+    )
+    pruned = assigned_blocks.join(F.broadcast(live_leaves), "partition_id", "leftsemi")  # leaf pruning
+    scored = _masked_topk(pruned, queries, query_roles, permission_assignment, k, metric, doc_masks)
     return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
 
 
@@ -514,10 +394,10 @@ def local_topk(
 
     This is the 100 TB path: each executor partition emits at most Q×k rows
     regardless of partition size, so the global merge (stage-2 window) sees
-    P×Q×k rows instead of N×Q. Distances accumulate per-dim in the codegen
-    fold's j-order (bit-identical to the expression plan); nothing is
-    collected on the driver — queries arrive at executors via a broadcast
-    local collect of a dim-sized DataFrame.
+    P×Q×k rows instead of N×Q. Distances accumulate per-dim in the j-order
+    of vector.py's expression folds (bit-identical after the 6-dp round);
+    nothing is collected on the driver — queries arrive at executors via a
+    broadcast local collect of a dim-sized DataFrame.
 
     ``mask_col`` names an ``array<long>`` per-row query-BITMASK column
     (bit p set = query at sorted position p may see this row — built by
@@ -526,7 +406,8 @@ def local_topk(
     kernel — the permission predicate travels as ~Q/8 bytes per row
     instead of a per-(query, block) join that replicates the vector
     payload Q times. Permitted NaN distances (cosine zero-norm) still
-    sort last-but-emitted, exactly as the expr plan ranks them.
+    sort last-but-emitted, exactly as a window over ``F.round`` of the
+    expression distance ranks them.
 
     ``q_chunk`` caps the query-axis width of the per-batch distance
     matrix (rows × q_chunk float64); default auto-sizes to a ~32 MB
@@ -535,12 +416,31 @@ def local_topk(
     unchunked kernel (pytest-pinned): the per-dim folds are elementwise
     per (row, query) pair and the cut is per-query-column independent.
     """
-    import numpy as np
+    return _local_topk(blocks, _collect_queries(queries), k, metric, vec_col, id_cols, mask_col, q_chunk)
 
-    q_rows = sorted(
+
+def _collect_queries(queries: DataFrame) -> list:
+    """The (query_id, query_vector) rows, sorted by query_id: bitmask bit p
+    ≡ p-th query id (the :func:`_query_doc_masks` contract)."""
+    return sorted(
         queries.select("query_id", "query_vector").collect(),
         key=lambda r: r["query_id"],
-    )  # sorted: bitmask bit p ≡ p-th query id (the _query_doc_masks contract)
+    )
+
+
+def _local_topk(
+    blocks: DataFrame,
+    q_rows: list,
+    k: int,
+    metric: str = "l2",
+    vec_col: str = "vector",
+    id_cols: tuple[str, str] = ("block_id", "document_id"),
+    mask_col: str | None = None,
+    q_chunk: int | None = None,
+) -> DataFrame:
+    """:func:`local_topk` over already-collected, sorted query rows."""
+    import numpy as np
+
     qids = np.array([r["query_id"] for r in q_rows])
     if mask_col is not None and len(np.unique(qids)) != len(qids):
         # a duplicated query_id would shift every later bit position —
@@ -558,7 +458,7 @@ def local_topk(
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, Q_, qh_ = bc.value
         nq = len(qids_)
-        # j-order query-norm fold (the same sequential sum the expr runs);
+        # j-order query-norm fold (the same sequential sum vector.py runs);
         # computed once over the full matrix, sliced per chunk — the fold
         # is elementwise per query so slicing cannot change any value
         qn2 = np.zeros(Q_.shape[0])
@@ -611,8 +511,8 @@ def local_topk(
                 Qc = Q_[q0:q0 + step]
                 nc = Qc.shape[0]
                 if metric == "l2":
-                    # per-dim j-order fold ≡ the expr's sequential (x−q)² sum
-                    # (vector.py's left-to-right _dsum contract)
+                    # per-dim j-order fold ≡ the sequential (x−q)² sum of
+                    # vector.py's expressions (the left-to-right _dsum contract)
                     d2 = np.zeros((n, nc))
                     for j in range(Q_.shape[1]):
                         t = X[:, j][:, None] - Qc[:, j][None, :]
@@ -694,8 +594,8 @@ def local_topk(
             yield pd.DataFrame(out)
 
     out = blocks.mapInPandas(part, schema=schema)
-    # pandas→Arrow masks NaN as null; restore the expr path's explicit NaN
-    # (zero-norm cosine rows must sort LAST ascending, a null sorts first)
+    # pandas→Arrow masks NaN as null; restore the explicit NaN (zero-norm
+    # cosine rows must sort LAST ascending, a null sorts first)
     return out.withColumn("distance", F.coalesce("distance", F.lit(float("nan"))))
 
 
@@ -713,7 +613,7 @@ def _qset_hash(qids) -> int:
 def _join_masks(
     blocks: DataFrame,
     masks: DataFrame,
-    queries: DataFrame,
+    n_q: int,
     permission_assignment: DataFrame,
 ) -> DataFrame:
     """Join the Q-bit mask table into the blocks scan with a SIZE-GATED
@@ -725,21 +625,20 @@ def _join_masks(
     driver OOM). The gate prices the relation from its INPUTS, never by
     re-running the mask build: rows ≤ countDistinct(document_id) over the
     permission relation (one linear partial-aggregated job) and word width
-    = ceil(Q/64) from the query count (a dim-sized job) — together far
-    cheaper than the distinct+groupBy the mask table itself costs — and
-    MEMOIZED per relation (:func:`hints.memoized_stat`): the stats are
-    artifact-scale properties, priced once per session like table
-    statistics, so repeated searches over the same corpus/workload pay no
-    per-call job (the per-call form measurably cost +0.2-1.0 s per bench
-    entry). The mask BUILD itself stays timed in-call (the r10 honesty
-    decision). The bound is an overestimate for masks restricted to a
-    query subset — conservative: it can only skip a broadcast that would
-    have fit. Under :data:`hints.BROADCAST_LIMIT_BYTES` the hint
+    = ceil(Q/64) from the query count ``n_q`` (the caller already holds
+    the collected query rows) — far cheaper than the distinct+groupBy the
+    mask table itself costs. The doc count is MEMOIZED per relation
+    (:func:`hints.memoized_stat`): it is an artifact-scale property,
+    priced once per session like table statistics, so repeated searches
+    over the same corpus pay no per-call job (the per-call form measurably
+    cost +0.2-1.0 s per bench entry). The mask BUILD itself stays timed
+    in-call (the r10 honesty decision). The bound is an overestimate for
+    masks restricted to a query subset — conservative: it can only skip a
+    broadcast that would have fit. Under :data:`hints.BROADCAST_LIMIT_BYTES` the hint
     broadcasts; above it, the join shuffles on document_id — bucketable,
     the same fallback shape as the ACORN metadata join (SURVEY D5). Both
     regimes are plan-tested.
     """
-    n_q = hints.memoized_stat(queries, "n_rows", queries.count)
     n_docs = hints.memoized_stat(
         permission_assignment, "n_distinct_docs",
         lambda: permission_assignment.agg(
@@ -755,6 +654,7 @@ def _query_doc_masks(
     queries: DataFrame,
     query_roles: DataFrame,
     permission_assignment: DataFrame,
+    qids: list | None = None,
 ) -> DataFrame:
     """(document_id, qmask array<long>): bit p of the packed mask set iff
     the query at sorted position p (ascending query_id — the order
@@ -762,16 +662,17 @@ def _query_doc_masks(
     data side of the prefilter kernel: Q bits ≈ Q/8 bytes per DOC, joined
     to the blocks scan once, instead of a per-(query, block) join that
     replicates the vector payload per query. Docs visible to no query are
-    absent (the expr path's inner join drops them too).
+    absent.
 
     Built in expressions over one dim-sized collect: roles → permitted
     (query, doc) pairs → per-doc sorted-position set → packed 64-bit
-    words. The query→position map is Q rows (the same bounded collect
-    ``local_topk`` makes for the query matrix), created as a literal
+    words. The query→position map is Q rows, created as a literal
     DataFrame — no count job, no global-window shuffle. The output is
-    ≤ one row per permissioned document."""
+    ≤ one row per permissioned document. ``qids`` (sorted, distinct)
+    skips the collect when the caller already holds the query rows."""
     spark = queries.sparkSession
-    qids = sorted(r[0] for r in queries.select("query_id").distinct().collect())
+    if qids is None:
+        qids = sorted(r[0] for r in queries.select("query_id").distinct().collect())
     from ..sources import literal_df
 
     # r12 guide §6: literal frames go through the Arrow path — the classic
@@ -797,7 +698,7 @@ def _query_doc_masks(
     # partial (map-side) set-merge dedupes before the shuffle, and the
     # set's nondeterministic element order cannot reach the output because
     # bitwiseOR is commutative. Mask values are pytest-pinned unchanged
-    # (test_properties round-trip + ≡-expr parity).
+    # (test_properties round-trip + the reference parity in test_knn).
     lists = qdocs.groupBy("document_id").agg(F.collect_set("qpos").alias("ps"))
     return lists.select(
         "document_id",
@@ -839,14 +740,14 @@ def _gather_local_topk(
     query_id, computes row-wise distances vectorized, rounds half-up 6 dp
     (``F.round`` parity), and emits only its per-(query) top-k under the
     (distance, block_id) order the stage-2 window applies. Rows whose
-    query_id is absent from ``queries`` are dropped — the expr path's
-    inner join does the same.
+    query_id is absent from ``queries`` are dropped, as an inner join with
+    the queries would drop them.
 
     ``group_col`` (role_id / partition_id / comb_role) switches the cut to
     per-(query, group) top-k and carries the column through — the shape
     the role-partition family's LOCAL window needs: each batch emits a
     superset of every (query, group) local top-k, so the downstream
-    window → dedup → global merge is row-identical to the expr plan."""
+    window → dedup → global merge sees every row it would keep."""
     import numpy as np
 
     q_rows = queries.select("query_id", "query_vector").collect()
@@ -881,7 +782,7 @@ def _gather_local_topk(
             QX = QM_[qidx]
             n = len(qidx)
             d = QM_.shape[1]
-            # per-dim j-order folds ≡ the expression folds bit-for-bit
+            # per-dim j-order folds ≡ vector.py's expression folds bit-for-bit
             # (vector.py's left-to-right _dsum contract; (0.0 + t0) ≡ t0)
             if metric == "l2":
                 acc = np.zeros(n)
@@ -947,7 +848,7 @@ def _gather_local_topk(
 
     cols = ["query_id", b_id, d_id] + ([group_col] if group_col else [])
     out = joined.select(*cols, vec_col).mapInPandas(part, schema=schema)
-    # pandas→Arrow masks NaN as null; restore the expr path's explicit NaN
+    # pandas→Arrow masks NaN as null; restore the explicit NaN
     # (cosine zero-norm rows must sort LAST ascending, a null sorts first)
     return out.withColumn("distance", F.coalesce("distance", F.lit(float("nan"))))
 

@@ -355,19 +355,19 @@ def adaptive_knn(
         # leaf routing + per-(query, block) permission check, exact
         return knn.knn_qdtree(qdtree_blocks, qs, qr, pa, k=k, metric=metric)
 
-    impl = {
+    arms = {
         "prefilter": knn.knn_prefilter,
         "postfilter": _post_arm,
     }
     if routing_mode in ("cost3", "cost4"):
-        impl["acorn"] = _acorn_arm
+        arms["acorn"] = _acorn_arm
     if routing_mode == "cost4":
-        impl["qdtree"] = _qdtree_arm
+        arms["qdtree"] = _qdtree_arm
     if has_partition_layout:
-        impl["comb_partition"] = knn.knn_comb_role_partition
+        arms["comb_partition"] = knn.knn_comb_role_partition
 
     outs = []
-    for strat, fn in impl.items():
+    for strat, fn in arms.items():
         qids = F.broadcast(routing.where(F.col("strategy") == strat).select("query_id"))
         qs = queries.join(qids, "query_id", "left_semi")
         qr = query_roles.join(qids, "query_id", "left_semi")

@@ -48,9 +48,9 @@ def literal_df(spark: SparkSession, rows, schema: str):
     call by every operator that embeds a literal relation (mask positions,
     IVF probe lists, tuning grids, BPE rules). A pandas/Arrow-built frame
     becomes a JVM-local table instead (~0.03 s construct, no per-job
-    Python round-trip). Falls back to the classic path for empty input or
-    non-scalar schemas (arrays/structs), where Arrow conversion may
-    silently fall back anyway.
+    Python round-trip). Falls back to the classic path for empty input,
+    a ``None`` in a numeric or boolean column, or non-scalar schemas
+    (arrays/structs), where Arrow conversion may silently fall back anyway.
 
     ``rows`` is a sequence of tuples matching ``schema`` ("name type,
     ..."), exactly as the classic ``createDataFrame`` sites passed them.
@@ -82,7 +82,11 @@ def literal_df(spark: SparkSession, rows, schema: str):
         else:
             return spark.createDataFrame(rows, schema)
     rows = list(rows)
-    if not rows:
+    if not rows or any(
+        r[i] is None for r in rows for i, (_, dt) in enumerate(fields) if dt != "object"
+    ):
+        # a None in a numpy-typed column: int rejects it, bool turns it
+        # into False and float into NaN — only the classic path keeps null
         return spark.createDataFrame(rows, schema)
     pdf = pd.DataFrame(
         {
