@@ -2084,25 +2084,34 @@ def q_lsh_recall(spark, sf_dir):
     )
 
 
+def _graph_index(t, sf_dir):
+    """The per-sf γ=1 graph over the whole corpus, built once: the NSW
+    index the graph entries search and the ACORN-1 index acorn_recall
+    searches are the same ``build_acorn_graph(m=8)`` table."""
+    from vectorsearch_rbac_spark.operators import graph_ann
+
+    return _cached(
+        ("graph_g1", sf_dir),
+        lambda: graph_ann.build_acorn_graph(
+            t["documentblocks"], m=8, gamma=1
+        ).localCheckpoint(),
+    )
+
+
 def q_graph_recall(spark, sf_dir):
     """D2 graph ANN (partition-local NSW + beam search, the hnswlib
     re-expression) vs exact ground truth: per-query recall@k. Approximate
     op → rows-only, like ivf/lsh/pq.
 
     Runs the PRODUCTION build-once/search-many path (r7): the adjacency
-    is materialized once per sf via build_nsw_graph (the reference builds
+    is materialized once per sf (``_graph_index``; the reference builds
     its hnswlib indexes offline too) and every search rides
-    nsw_search_indexed — the fused nsw_search stays certified through
-    quantized_topk's graph_exact tag."""
+    nsw_search_indexed — the in-cogroup build (``adjacency=None``) stays
+    certified through quantized_topk's graph_exact tag."""
     from vectorsearch_rbac_spark.operators import graph_ann
 
     t = _rbac(spark, sf_dir)
-    g = _cached(
-        ("nsw_graph", sf_dir),
-        lambda: graph_ann.build_nsw_graph(
-            t["documentblocks"], m=8
-        ).localCheckpoint(),
-    )
+    g = _graph_index(t, sf_dir)
     pred = graph_ann.nsw_search_indexed(
         t["documentblocks"], g, t["queries"], k=TOPK, ef=48,
         # the per-sf cached index covers this exact corpus — a stale hit
@@ -2128,12 +2137,7 @@ def q_graph_postfilter_recall(spark, sf_dir):
     from vectorsearch_rbac_spark.operators import graph_ann
 
     t = _rbac(spark, sf_dir)
-    g = _cached(
-        ("nsw_graph", sf_dir),
-        lambda: graph_ann.build_nsw_graph(
-            t["documentblocks"], m=8
-        ).localCheckpoint(),
-    )
+    g = _graph_index(t, sf_dir)
     expansion = 4
     cand = graph_ann.nsw_search_indexed(
         t["documentblocks"], g, t["queries"], k=TOPK * expansion, ef=96,
@@ -2164,19 +2168,15 @@ def q_acorn_recall(spark, sf_dir):
     permitted answer: per-query recall@k. Approximate op → rows-only.
 
     Runs the PRODUCTION build-once/search-many path (r8): the adjacency
-    materializes once per sf via build_acorn_graph (the reference builds
-    its ACORN indexes offline) and every search rides
-    acorn_search_indexed — pytest pins indexed ≡ fused, and the fused
-    traversal stays certified through quantized_topk's acorn_exact tag."""
+    materializes once per sf (``_graph_index``; the reference builds its
+    ACORN indexes offline) and every search rides acorn_search_indexed —
+    pytest pins a prebuilt index ≡ the in-cogroup build
+    (``adjacency=None``), and the in-cogroup traversal stays certified
+    through quantized_topk's acorn_exact tag."""
     from vectorsearch_rbac_spark.operators import graph_ann
 
     t = _rbac(spark, sf_dir)
-    g = _cached(
-        ("acorn_graph_g1", sf_dir),
-        lambda: graph_ann.build_acorn_graph(
-            t["documentblocks"], m=8, gamma=1
-        ).localCheckpoint(),
-    )
+    g = _graph_index(t, sf_dir)
     pred = graph_ann.acorn_search_indexed(
         t["documentblocks"], g, t["queries"], t["query_roles"],
         k=TOPK, m=8, ef=48,
@@ -2259,7 +2259,7 @@ def q_rbac_graph_recall(spark, sf_dir):
     only the top-k is approximate).
 
     r8: build-once/search-many — the store, the per-partition graph
-    adjacency (build_nsw_graph over comb_role partitions: the reference
+    adjacency (build_acorn_graph over comb_role partitions: the reference
     maintains one hnswlib index per partition offline), and the exact
     ground truth are deterministic per sf and cached; the routed beam
     SEARCH runs in full every call."""
@@ -2274,7 +2274,7 @@ def q_rbac_graph_recall(spark, sf_dir):
     )
     g = _cached(
         ("dyn_graphs", sf_dir),
-        lambda: graph_ann.build_nsw_graph(
+        lambda: graph_ann.build_acorn_graph(
             store, m=8, id_col="block_id", vec_col="vector", part_col="comb_role"
         ).localCheckpoint(),
     )
@@ -2702,7 +2702,7 @@ def _store_lifecycle_build(spark, sf_dir):
         # (build-once-search-many, like any real index); warm calls read
         # the parquet adjacency back and every checksum still recomputes
         base_blocks = g_blocks.where(F.col("block_id") % 5 != 0)
-        g0 = graph_ann.build_nsw_graph(base_blocks, m=8, id_col="block_id", vec_col="vector")
+        g0 = graph_ann.build_acorn_graph(base_blocks, m=8, id_col="block_id", vec_col="vector")
         if sg_mod > 1:
             # sliced arrivals get their own drop dir (the shared one
             # replays the FULL arriving set)

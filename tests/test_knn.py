@@ -491,12 +491,12 @@ def test_graph_nsw_recall_floor(spark, sf_dir):
     blocks, qs = t["documentblocks"], t["queries"]
     truth = knn.knn_topk_fast(blocks, qs, k=10)
 
-    pred = graph_ann.nsw_search(blocks, qs, k=10, m=8, ef=48)
+    pred = graph_ann.nsw_search_indexed(blocks, None, qs, k=10, m=8, ef=48)
     r = knn.recall_at_k(pred, truth).agg(F.avg("recall")).first()[0]
     assert r >= 0.9
 
     parts = blocks.withColumn("part", F.pmod(F.col("block_id"), F.lit(4)))
-    pred_p = graph_ann.nsw_search(parts, qs, k=10, m=8, ef=48, part_col="part")
+    pred_p = graph_ann.nsw_search_indexed(parts, None, qs, k=10, m=8, ef=48, part_col="part")
     rp = knn.recall_at_k(pred_p, truth).agg(F.avg("recall")).first()[0]
     assert rp >= 0.9
     # per-query rows are exactly k with contiguous ranks
@@ -514,8 +514,8 @@ def test_acorn_filtered_traversal_recall_and_purity(spark, sf_dir):
     from vectorsearch_rbac_spark.operators import graph_ann, knn
 
     t = entry._rbac(spark, sf_dir)
-    pred = graph_ann.acorn_search(
-        t["documentblocks"], t["queries"], t["query_roles"], k=10, m=8, ef=48
+    pred = graph_ann.acorn_search_indexed(
+        t["documentblocks"], None, t["queries"], t["query_roles"], k=10, m=8, ef=48
     )
     truth = entry.q_rbac_prefilter_topk(spark, sf_dir)
     r = knn.recall_at_k(pred, truth).agg(F.avg("recall")).first()[0]
@@ -547,8 +547,8 @@ def test_acorn_gamma_and_exact(spark, sf_dir):
     from vectorsearch_rbac_spark.operators import graph_ann, knn
 
     t = entry._rbac(spark, sf_dir)
-    pred = graph_ann.acorn_search(
-        t["documentblocks"], t["queries"], t["query_roles"], k=10, m=8,
+    pred = graph_ann.acorn_search_indexed(
+        t["documentblocks"], None, t["queries"], t["query_roles"], k=10, m=8,
         ef=96, gamma=4,
     )
     truth = entry.q_rbac_prefilter_topk(spark, sf_dir)
@@ -581,11 +581,12 @@ def test_acorn_gamma_and_exact(spark, sf_dir):
 
 def test_acorn_indexed_equals_fused(spark, sf_dir):
     """D5 persisted-index path (r8): acorn_search_indexed over a
-    build_acorn_graph adjacency must return EXACTLY the rows the fused
-    acorn_search computes with the same knobs — same deterministic build,
-    same traversal, with the build amortized build-once/search-many. Both
-    ACORN-1 (2-hop) and ACORN-γ (stored distance-sorted lists replace the
-    per-search re-sort) are pinned, with the predicate supplied as data."""
+    build_acorn_graph adjacency must return EXACTLY the rows the
+    in-cogroup build (``adjacency=None``) computes with the same knobs —
+    same deterministic build, same traversal, with the build amortized
+    build-once/search-many. Both ACORN-1 (2-hop) and ACORN-γ (stored
+    diverse-first lists replace the per-search ordering) are pinned, with
+    the predicate supplied as data."""
     import __spark_entry__ as entry
     from vectorsearch_rbac_spark.operators import graph_ann
 
@@ -594,8 +595,8 @@ def test_acorn_indexed_equals_fused(spark, sf_dir):
     perms = t["permission_assignment"]
     for gamma, ef in ((1, 48), (4, 96)):
         g = graph_ann.build_acorn_graph(blocks, m=8, gamma=gamma).localCheckpoint()
-        fused = graph_ann.acorn_search(
-            blocks, qs, qr, k=10, m=8, ef=ef, gamma=gamma, permissions=perms
+        fused = graph_ann.acorn_search_indexed(
+            blocks, None, qs, qr, k=10, m=8, ef=ef, gamma=gamma, permissions=perms
         ).select("query_id", "block_id", "rank")
         indexed = graph_ann.acorn_search_indexed(
             blocks, g, qs, qr, k=10, m=8, ef=ef, gamma=gamma, permissions=perms
@@ -608,9 +609,9 @@ def test_acorn_indexed_equals_fused(spark, sf_dir):
 def test_acorn_indexed_string_part_and_stale_fallback(spark, sf_dir):
     """D4×D5 composition (r9): build_acorn_graph over the dynamic
     comb-role store with a STRING part key persists (the adjacency
-    schema mirrors the part column's own type, as build_nsw_graph does),
-    and acorn_search_indexed over it returns exactly the fused
-    acorn_search's rows with the same knobs. A STALE adjacency (blocks
+    schema mirrors the part column's own type), and acorn_search_indexed
+    over it returns exactly the in-cogroup build's (``adjacency=None``)
+    rows with the same knobs. A STALE adjacency (blocks
     added to the store after the build) must flip its partition to the
     in-cogroup rebuild through the LEFT join — never a silent drop."""
     import __spark_entry__ as entry
@@ -623,8 +624,8 @@ def test_acorn_indexed_string_part_and_stale_fallback(spark, sf_dir):
         store, m=8, gamma=1, part_col="comb_role"
     ).localCheckpoint()
     assert dict(g.dtypes)["part"] == "string"
-    fused = graph_ann.acorn_search(
-        store, qs, qr, k=10, m=8, ef=48, part_col="comb_role", permissions=perms
+    fused = graph_ann.acorn_search_indexed(
+        store, None, qs, qr, k=10, m=8, ef=48, part_col="comb_role", permissions=perms
     ).select("query_id", "block_id", "rank")
     indexed = graph_ann.acorn_search_indexed(
         store, g, qs, qr, k=10, m=8, ef=48, part_col="comb_role",
@@ -636,7 +637,7 @@ def test_acorn_indexed_string_part_and_stale_fallback(spark, sf_dir):
 
     # stale index: built on a subset, searched over the full store — the
     # missing blocks' null neighbor lists trigger the partition rebuild,
-    # so the result equals the fused (deterministic in-cogroup build)
+    # so the result equals the deterministic in-cogroup build
     part_store = store.where(F.col("block_id") % 5 != 0)
     g_stale = graph_ann.build_acorn_graph(
         part_store, m=8, gamma=1, part_col="comb_role"
@@ -652,16 +653,17 @@ def test_acorn_indexed_string_part_and_stale_fallback(spark, sf_dir):
 def test_nsw_indexed_stale_fallback(spark, sf_dir):
     """r9: nsw_search_indexed mirrors the stale-index safety of its
     siblings — blocks absent from the adjacency flip their partition to
-    the in-cogroup rebuild, so a stale index equals the fused search."""
+    the in-cogroup rebuild, so a stale index equals the search with no
+    index (``adjacency=None``)."""
     import __spark_entry__ as entry
     from vectorsearch_rbac_spark.operators import graph_ann
 
     t = entry._rbac(spark, sf_dir)
     blocks, qs = t["documentblocks"], t["queries"]
-    g_stale = graph_ann.build_nsw_graph(
+    g_stale = graph_ann.build_acorn_graph(
         blocks.where(F.col("block_id") % 5 != 0), m=8
     ).localCheckpoint()
-    fused = graph_ann.nsw_search(blocks, qs, k=10, m=8, ef=48).select(
+    fused = graph_ann.nsw_search_indexed(blocks, None, qs, k=10, m=8, ef=48).select(
         "query_id", "block_id", "rank"
     )
     stale = graph_ann.nsw_search_indexed(
@@ -681,10 +683,10 @@ def test_nsw_indexed_stale_fallback(spark, sf_dir):
     # index AHEAD of the corpus (blocks deleted since the build without
     # delete_from_graph): stored edges point at removed ids — silently
     # stripping them could break the ring, so the partition must rebuild
-    # and equal the fused search over the shrunken corpus
-    g_full = graph_ann.build_nsw_graph(blocks, m=8).localCheckpoint()
+    # and equal the index-free search over the shrunken corpus
+    g_full = graph_ann.build_acorn_graph(blocks, m=8).localCheckpoint()
     shrunk = blocks.where(F.col("block_id") % 5 != 0)
-    fused_shrunk = graph_ann.nsw_search(shrunk, qs, k=10, m=8, ef=48).select(
+    fused_shrunk = graph_ann.nsw_search_indexed(shrunk, None, qs, k=10, m=8, ef=48).select(
         "query_id", "block_id", "rank"
     )
     ahead = graph_ann.nsw_search_indexed(
@@ -696,7 +698,7 @@ def test_nsw_indexed_stale_fallback(spark, sf_dir):
 
 def test_dynamic_graph_prebuilt_equals_fused(spark, sf_dir):
     """D2×D4 capstone, r8 indexed path: feeding knn_dynamic_graph a
-    prebuilt per-comb_role adjacency (build_nsw_graph with a STRING part
+    prebuilt per-comb_role adjacency (build_acorn_graph with a STRING part
     key) must return exactly the rows the in-cogroup build computes —
     same deterministic build, the rebuild just moves offline."""
     import __spark_entry__ as entry
@@ -704,7 +706,7 @@ def test_dynamic_graph_prebuilt_equals_fused(spark, sf_dir):
 
     t = entry._rbac(spark, sf_dir)
     store = dynamic.build_store(t["documentblocks"], t["permission_assignment"])
-    g = graph_ann.build_nsw_graph(
+    g = graph_ann.build_acorn_graph(
         store, m=8, id_col="block_id", vec_col="vector", part_col="comb_role"
     ).localCheckpoint()
     fused = graph_ann.knn_dynamic_graph(
@@ -720,7 +722,7 @@ def test_dynamic_graph_prebuilt_equals_fused(spark, sf_dir):
     # a STALE adjacency (blocks added to the store after the build) must
     # fall back to the in-cogroup rebuild, never silently drop blocks
     part_store = store.where(F.col("block_id") % 5 != 0)
-    g_stale = graph_ann.build_nsw_graph(
+    g_stale = graph_ann.build_acorn_graph(
         part_store, m=8, id_col="block_id", vec_col="vector", part_col="comb_role"
     ).localCheckpoint()
     stale = graph_ann.knn_dynamic_graph(
@@ -733,7 +735,7 @@ def test_dynamic_graph_prebuilt_equals_fused(spark, sf_dir):
     # string-keyed (comb_role) adjacency link without error
     new = store.where(F.col("block_id") % 7 == 0)
     old = store.where(F.col("block_id") % 7 != 0)
-    g_old = graph_ann.build_nsw_graph(
+    g_old = graph_ann.build_acorn_graph(
         old, m=8, id_col="block_id", vec_col="vector", part_col="comb_role"
     ).localCheckpoint()
     g_up = graph_ann.insert_into_graph(
@@ -757,7 +759,7 @@ def test_graph_index_lifecycle(spark, sf_dir):
     old = blocks.where(F.col("block_id") % 7 != 0)
     new = blocks.where(F.col("block_id") % 7 == 0)
 
-    g0 = graph_ann.build_nsw_graph(old, m=8).localCheckpoint()
+    g0 = graph_ann.build_acorn_graph(old, m=8).localCheckpoint()
     pred0 = graph_ann.nsw_search_indexed(old, g0, qs, k=10, ef=48)
     truth_old = knn.knn_topk_fast(old, qs, k=10)
     r0 = knn.recall_at_k(pred0, truth_old).agg(F.avg("recall")).first()[0]
@@ -926,8 +928,8 @@ def test_acorn_over_generated_rbac(spark, t):
     )
     assert diff == 0 and exact.count() == truth.count()
 
-    pred = graph_ann.acorn_search(
-        t["documentblocks"], queries, qroles, k=10, m=8, ef=64, permissions=pa
+    pred = graph_ann.acorn_search_indexed(
+        t["documentblocks"], None, queries, qroles, k=10, m=8, ef=64, permissions=pa
     )
     r = knn.recall_at_k(pred, truth).agg(F.avg("recall")).first()[0]
     assert r >= 0.85
@@ -951,7 +953,7 @@ def test_batched_beams_match_sequential_kernels():
     import numpy as np
     from vectorsearch_rbac_spark.operators.graph_ann import (
         _acorn_beam, _acorn_gamma_beam, _batched_beams, _beam_search,
-        _build_adjacency, _medoid, _sorted_neighbors)
+        _build_adjacency, _diverse_sorted_neighbors, _medoid)
 
     rng = np.random.default_rng(7)
     vecs = rng.normal(size=(300, 16))
@@ -982,7 +984,7 @@ def test_batched_beams_match_sequential_kernels():
     entries = np.asarray(entries, dtype=np.int64)
 
     # canonical ACORN-1 order: passing 1-hop first, then 2-hop (the
-    # vectorized closure acorn_search ships)
+    # vectorized closure _acorn_masked_search ships)
     def expand1(i, u):
         al = masks[i]
         nb = adjarr[u]
@@ -993,14 +995,14 @@ def test_batched_beams_match_sequential_kernels():
         two = np.concatenate([adjarr[int(v)] for v in failing])
         return np.concatenate([passing, two[al[two]]])
 
-    seq = [_acorn_beam(vecs, adj, q, k, ef, al, True, norms=norms)
+    seq = [_acorn_beam(vecs, adj, q, k, ef, al, norms=norms)
            for q, al in zip(qs, masks)]
     bat = _batched_beams(vecs, norms, qs, entries, k, ef, expand1, dedupe=True)
     for s, b in zip(seq, bat):
         assert [u for _, u in s] == [u for _, u in b]
 
     m_trunc = 6
-    adj_sorted = _sorted_neighbors(vecs, adj, norms)
+    adj_sorted = _diverse_sorted_neighbors(vecs, adj, norms)
 
     def expand_g(i, u):
         nb = adj_sorted[u]
@@ -1028,7 +1030,7 @@ def test_acorn_beam_kernels():
         _acorn_beam,
         _acorn_gamma_beam,
         _build_adjacency,
-        _sorted_neighbors,
+        _diverse_sorted_neighbors,
     )
 
     rng = np.random.default_rng(7)
@@ -1055,7 +1057,7 @@ def test_acorn_beam_kernels():
     # γ truncation beam on the unpruned nearest-γm graph
     gamma, m = 4, 8
     adj_g = _build_adjacency(vecs, m * gamma, method="exact")
-    adj_sorted = _sorted_neighbors(vecs, adj_g, norms)
+    adj_sorted = _diverse_sorted_neighbors(vecs, adj_g, norms)
     hits = tot = 0
     for _ in range(20):
         allowed = rng.random(n) < 1.0 / gamma
@@ -1108,7 +1110,7 @@ def test_insert_preserves_ring_connectivity(spark, sf_dir):
     )
     old = emb.where(F.col("block_id") % 4 != 0)
     new = emb.where(F.col("block_id") % 4 == 0)
-    g0 = graph_ann.build_nsw_graph(old, m=8, id_col="block_id", vec_col="vector")
+    g0 = graph_ann.build_acorn_graph(old, m=8, id_col="block_id", vec_col="vector")
     g1 = graph_ann.insert_into_graph(old, g0, new, m=8, id_col="block_id", vec_col="vector")
     rows = {r["id"]: set(r["neighbors"]) for r in g1.collect()}
     ids = sorted(rows)
@@ -1714,13 +1716,31 @@ def _edge_search(name, e, spark):
         return lambda k: dynamic.knn_dynamic(store, q, qr, k=k)
     if name == "adaptive_knn":
         return lambda k: strategy.adaptive_knn(b, q, qr, pa, e["user_roles"], k=k, routing_mode="cost")
+    # graph searches at knobs where the beam is provably exhaustive: ef
+    # (and ACORN's failing-run depth) above the corpus size over the
+    # ring-connected graph
+    from vectorsearch_rbac_spark.operators import graph_ann
+
+    if name in ("acorn_search_indexed", "acorn_search_indexed_no_index"):
+        g = None if name.endswith("_no_index") else graph_ann.build_acorn_graph(
+            b, m=8, build_method="exact"
+        ).localCheckpoint()
+        docs = b.select("block_id", "document_id")
+        return lambda k: graph_ann.acorn_search_indexed(
+            b, g, q, qr, k=k, m=8, ef=1 << 30, max_hops=1 << 30, permissions=pa,
+            build_method="exact",
+        ).join(docs, "block_id")
+    if name == "knn_dynamic_graph":
+        store = dynamic.build_store(b, pa)
+        return lambda k: graph_ann.knn_dynamic_graph(store, q, qr, k=k, ef=1 << 30)
     raise KeyError(name)
 
 
 @pytest.mark.parametrize("name", [
     "knn_prefilter", "knn_postfilter", "knn_role_partition", "knn_role_partition_logical",
     "knn_comb_role_partition", "knn_rls", "knn_qdtree", "knn_role_routed", "knn_budget",
-    "knn_dynamic", "adaptive_knn",
+    "knn_dynamic", "adaptive_knn", "acorn_search_indexed_no_index", "acorn_search_indexed",
+    "knn_dynamic_graph",
 ])
 def test_access_contract_edge_cases(edge, spark, name):
     """The access contract on its edge cases, for every RBAC strategy:

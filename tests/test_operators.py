@@ -1665,7 +1665,7 @@ def test_r6_second_session_degenerate_inputs(spark):
     q2 = spark.createDataFrame([(1, [0.0, 0.0])], "query_id long, query_vector array<float>")
     no_roles = spark.createDataFrame([], "query_id long, role_id long")
     for kwargs in ({}, {"gamma": 4, "ef": 96}, {"max_hops": 1 << 30, "ef": 1 << 30}):
-        got = graph_ann.acorn_search(blocks, q2, no_roles, k=3, m=2, **kwargs).count()
+        got = graph_ann.acorn_search_indexed(blocks, None, q2, no_roles, k=3, m=2, **kwargs).count()
         assert got == 0  # empty permitted set -> no rows, never a crash
 
     docs = spark.createDataFrame(

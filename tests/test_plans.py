@@ -848,3 +848,30 @@ def test_qdtree_masked_path_has_no_per_query_routing_exchange(t, sf_dir):
 
     p_masked = _norm(_plan(knn.knn_qdtree(*args, k=10)))
     assert "hashpartitioning(query_id, partition_id" not in p_masked, p_masked
+
+
+def test_graph_search_without_index_has_no_adjacency_join(t):
+    """``adjacency=None`` builds every partition's graph inside the search
+    cogroup: the plan must carry no corpus⋈adjacency join (nothing
+    reads ``neighbors``) and exactly one cogroup. A prebuilt index adds
+    the SHUFFLE_HASH join of the stored neighbor lists."""
+    import re
+
+    from vectorsearch_rbac_spark.operators import graph_ann
+
+    blocks, qs, qr = t["documentblocks"], t["queries"], t["query_roles"]
+    g = graph_ann.build_acorn_graph(blocks, m=8)
+    for search in (
+        lambda adj: graph_ann.nsw_search_indexed(blocks, adj, qs, k=10),
+        lambda adj: graph_ann.acorn_search_indexed(
+            blocks, adj, qs, qr, k=10, permissions=t["permission_assignment"]
+        ),
+    ):
+        p = _plan(search(None))
+        assert "neighbors" not in p, p
+        assert not re.search(r"ShuffledHashJoin \[[^\]]*\b_id#", p), p
+        assert p.count("FlatMapCoGroupsInPandas") == 1, p
+        p_idx = _plan(search(g))
+        assert "neighbors" in p_idx, p_idx
+        assert re.search(r"ShuffledHashJoin \[[^\]]*\b_id#", p_idx), p_idx
+        assert p_idx.count("ShuffledHashJoin") == p.count("ShuffledHashJoin") + 1, p_idx

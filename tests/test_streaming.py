@@ -249,7 +249,7 @@ def test_streaming_graph_inserts_match_batch_graph(spark, sf_dir, tmp_path):
     drop = str(tmp_path / "graph_in")
     new.repartition(3).write.mode("overwrite").parquet(drop)
 
-    g0 = graph_ann.build_nsw_graph(old, m=8, id_col="vec_id", vec_col="embedding")
+    g0 = graph_ann.build_acorn_graph(old, m=8, id_col="vec_id", vec_col="embedding")
     blocks, graph = S.run_streaming_graph_inserts(
         spark, drop, emb.select("vec_id", "embedding").schema,
         old.select("vec_id", "embedding"), g0, m=8,
@@ -265,8 +265,8 @@ def test_streaming_graph_inserts_match_batch_graph(spark, sf_dir, tmp_path):
     pred = graph_ann.nsw_search_indexed(
         blocks, graph, qs, k=10, ef=48, id_col="vec_id", vec_col="embedding"
     ).withColumnRenamed("vec_id", "block_id")
-    truth = graph_ann.nsw_search(
-        emb, qs, k=10, m=8, ef=256, id_col="vec_id", vec_col="embedding"
+    truth = graph_ann.nsw_search_indexed(
+        emb, None, qs, k=10, m=8, ef=256, id_col="vec_id", vec_col="embedding"
     ).withColumnRenamed("vec_id", "block_id")
     r = knn.recall_at_k(pred, truth).agg(F.avg("recall")).first()[0]
     assert r >= 0.8  # incremental inserts: looser floor than a fresh build

@@ -55,6 +55,13 @@ Design for a cluster:
   partition's (replicated or role-routed) queries on the other — the
   same shape ``knn_dynamic_graph`` pioneered, so a 10⁶-query batch
   distributes like any other relation.
+- One search per graph index: :func:`nsw_search_indexed`,
+  :func:`acorn_search_indexed` and :func:`knn_dynamic_graph` read a
+  :func:`build_acorn_graph` table (γ=1 is the NSW graph), and with
+  ``adjacency=None`` every partition builds its graph inside the search
+  cogroup instead — no corpus⋈adjacency join, the one-shot form the
+  exactness certifications run. A partition whose stored index is stale
+  rebuilds in the cogroup the same way.
 - Results merge with the repo's standard two-phase top-k (per-partition
   candidates → global rank), so RBAC routing composes: restrict the
   partition set per query exactly as ``knn_budget``/``knn_dynamic`` do.
@@ -455,7 +462,7 @@ def _batched_entries(vecs, norms, qmat):
     Spark-friendly way: the 'upper layer' is a deterministic ≤4096-node
     sample scanned EXACTLY with one batched GEMM per query batch —
     BLAS-bound and lockstep-shaped, where pointer descent would be
-    per-query Python. Measured at 256k rows (tools/graph_probe.py):
+    per-query Python. Measured at 256k rows (tools/probe_results_r7.txt):
     medoid entry collapses recall@ef48 to 0.70; the sampled entry
     restores 0.950 — identical to an exact-nearest entry — so upper
     LAYERS beyond this single sampled level buy nothing at partition
@@ -479,8 +486,16 @@ def _batched_entries(vecs, norms, qmat):
     return out
 
 
+def _part_key(part_col: str | None, alias: str):
+    """The partition key column: ``part_col`` itself, or — with no
+    partition column — a literal 0 cast to long (_single_part's key is
+    long, and a cogroup's two grouping keys must agree in type; implicit
+    int→long coercion is version-fragile)."""
+    return (F.col(part_col) if part_col else F.lit(0).cast("long")).alias(alias)
+
+
 def _replicate_queries(
-    src: DataFrame, queries: DataFrame, parts_from: DataFrame | None = None
+    blocks: DataFrame, queries: DataFrame, part_col: str | None
 ) -> DataFrame:
     """Fan the query relation out to every graph partition (queries carry
     no routing key here — contrast knn_dynamic_graph, where roles route).
@@ -490,17 +505,21 @@ def _replicate_queries(
     the cogroup's two sides don't share the source's _part attribute
     (self-join ambiguity).
 
-    ``parts_from`` supplies a CHEAPER relation carrying the same
-    partition values (``_part`` column): the single-partition literal
-    when there is no part_col (deriving it from src would full-scan the
-    corpus just to produce one row), or the dim-sized adjacency table in
-    the indexed search (src there is a corpus⋈adjacency join that
-    Catalyst would otherwise execute twice — exchanges aren't reused
-    across subplans)."""
-    parts = (parts_from if parts_from is not None else src).select(
-        F.col("_part").alias("_qpart")
-    ).distinct()
-    return queries.crossJoin(F.broadcast(parts))
+    Partition values come from a column-pruned scan of the CORPUS, or the
+    single-partition literal when there is no part_col (deriving it from
+    the corpus would full-scan it just to produce one row). Never from the
+    search source (with an index that is a corpus⋈adjacency join Catalyst
+    would execute twice — exchanges aren't reused across subplans) and
+    never from the adjacency (a stale index missing an entire partition
+    would stop queries reaching that partition's blocks — the rebuild
+    fallback needs the queries there)."""
+    parts = (
+        _single_part(blocks.sparkSession) if part_col is None
+        else blocks.select(F.col(part_col).alias("_part"))
+    )
+    return queries.crossJoin(
+        F.broadcast(parts.select(F.col("_part").alias("_qpart")).distinct())
+    )
 
 
 def _single_part(spark) -> DataFrame:
@@ -509,88 +528,96 @@ def _single_part(spark) -> DataFrame:
     return spark.range(1).select(F.lit(0).cast("long").alias("_part"))
 
 
-def _rank_topk(cand: DataFrame, k: int, id_col: str) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("distance", 6).asc(), F.col("_id").asc()
+def _join_index(
+    src: DataFrame, adjacency: DataFrame | None, part: str = "_part", id_: str = "_id"
+) -> DataFrame:
+    """LEFT-join a stored index's neighbor lists onto the partition rows.
+    Corpus-sized ⋈ corpus-sized on the same key: hash-join hint — the
+    applyInPandas output has no size stats and would SMJ. LEFT: a block
+    missing from a stale index keeps a null neighbor list, which flips its
+    partition to the in-cogroup rebuild — never a silent drop. With no
+    index (``None``) the rows pass through untouched, so the plan carries
+    no join and every partition builds its graph in the cogroup."""
+    if adjacency is None:
+        return src
+    return src.join(
+        adjacency.select(
+            F.col("part").alias(part), F.col("id").alias(id_), "neighbors"
+        ).hint("SHUFFLE_HASH"),
+        [part, id_],
+        "left",
     )
+
+
+def _sorted_partition(pdf: pd.DataFrame, id_key: str, vec_key: str):
+    """One partition's rows in id order — every kernel's node positions
+    are id-sorted, so position order == id order (the rank tie-break) —
+    with the stacked float64 vectors and the id array."""
+    pdf = pdf.sort_values(id_key).reset_index(drop=True)
+    vecs = np.stack(pdf[vec_key].values).astype(np.float64)
+    return pdf, vecs, pdf[id_key].to_numpy()
+
+
+def _query_matrix(q_pdf: pd.DataFrame):
+    qids = q_pdf["query_id"].to_numpy()
+    qmat = np.stack(
+        [np.asarray(v, dtype=np.float64) for v in q_pdf["query_vector"].values]
+    )
+    return qids, qmat
+
+
+def _nsw_partition_search(
+    blocks_pdf: pd.DataFrame,
+    q_pdf: pd.DataFrame,
+    k: int,
+    ef: int,
+    m: int,
+    build_method: str,
+    stale: str,
+    id_key: str = "_id",
+    vec_key: str = "_vec",
+    carry: tuple[str, ...] = (),
+) -> pd.DataFrame:
+    """The ONE NSW partition search: id-sort, the stored adjacency (or an
+    in-cogroup build when there is none or it is stale), entry routing,
+    the lockstep beams, and one ``(query_id, id, *carry, distance)`` row
+    per result. ``carry`` names block columns copied through by node."""
+    cols = ["query_id", id_key, *carry, "distance"]
+    if len(blocks_pdf) == 0 or len(q_pdf) == 0:
+        return pd.DataFrame(columns=cols)
+    blocks_pdf, vecs, ids = _sorted_partition(blocks_pdf, id_key, vec_key)
+    adj = _pos_mapped_or_stale(blocks_pdf, ids, stale)
+    if adj is None:
+        adj = _build_adjacency(vecs, m, method=build_method)
+    norms = (vecs * vecs).sum(axis=1)
+    qids, qmat = _query_matrix(q_pdf)
+    entries = _batched_entries(vecs, norms, qmat)
+    found = _batched_beams(vecs, norms, qmat, entries, k, ef, lambda i, u: adj[u])
+    carried = [blocks_pdf[c].to_numpy() for c in carry]
+    rows = [
+        (int(qids[i]), int(ids[u]), *(int(c[u]) for c in carried),
+         float(np.sqrt(max(d2, 0.0))))
+        for i, res in enumerate(found)
+        for d2, u in res
+    ]
+    return pd.DataFrame(rows, columns=cols)
+
+
+def _rank_topk(
+    cand: DataFrame, k: int, id_col: str, id_key: str = "_id", carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Global two-phase merge: per-query rank by 6-dp distance, id
+    tie-break, keep the top k; ``id_key`` is emitted as ``id_col``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.round("distance", 6).asc(), F.col(id_key).asc()
+    )
+    ident = F.col(id_key) if id_key == id_col else F.col(id_key).alias(id_col)
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", F.col("_id").alias(id_col),
+        .select("query_id", ident, *carry,
                 F.round("distance", 6).alias("distance"), "rank")
     )
-
-
-def nsw_search(
-    blocks: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 8,
-    ef: int = 48,
-    id_col: str = "block_id",
-    vec_col: str = "vector",
-    part_col: str | None = None,
-    build_method: str = "auto",
-) -> DataFrame:
-    """Beam-search every query against every partition's NSW graph; merge
-    with a global rank window (two-phase top-k). ``part_col=None`` treats
-    the corpus as one partition (toy scale); with a partition column each
-    group builds/searches its own graph in parallel.
-
-    Queries flow as a RELATION: replicated per partition with a broadcast
-    of the (tiny) partition list, then cogrouped against the blocks — no
-    driver collect, so a 10⁶-query batch behaves like any other join.
-
-    NOTE: this FUSED form rebuilds each partition's graph inside the
-    search cogroup — right for one-shot batches and for the exactness
-    certifications (the build is part of what the oracle certifies).
-    Build-once/search-many callers should persist the adjacency with
-    :func:`build_nsw_graph` and search via :func:`nsw_search_indexed`
-    (the path the benched ``graph`` recall member runs).
-    """
-    src = blocks.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        # literal cast to long: _single_part's key is long, and the
-        # cogroup's two grouping keys must agree in type (implicit
-        # int→long coercion is version-fragile)
-        (F.col(part_col) if part_col else F.lit(0).cast("long")).alias("_part"),
-    )
-    parts_from = (
-        _single_part(blocks.sparkSession) if part_col is None
-        else blocks.select(F.col(part_col).alias("_part"))  # column-pruned scan
-    )
-    rq = _replicate_queries(src, queries.select("query_id", "query_vector"), parts_from)
-
-    def search_cogroup(blocks_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(blocks_pdf) == 0 or len(q_pdf) == 0:
-            return pd.DataFrame(columns=["query_id", "_id", "distance"])
-        blocks_pdf = blocks_pdf.sort_values("_id").reset_index(drop=True)
-        vecs = np.stack(blocks_pdf["_vec"].values).astype(np.float64)
-        ids = blocks_pdf["_id"].to_numpy()
-        adjarr = adj = _build_adjacency(vecs, m, method=build_method)
-        norms = (vecs * vecs).sum(axis=1)
-        qids = q_pdf["query_id"].to_numpy()
-        qmat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in q_pdf["query_vector"].values]
-        )
-        entries = _batched_entries(vecs, norms, qmat)
-        found = _batched_beams(
-            vecs, norms, qmat, entries, k, ef, lambda i, u: adjarr[u]
-        )
-        rows = [
-            (int(qids[i]), int(ids[u]), float(np.sqrt(max(d2, 0.0))))
-            for i, res in enumerate(found)
-            for d2, u in res
-        ]
-        return pd.DataFrame(rows, columns=["query_id", "_id", "distance"])
-
-    cand = (
-        src.groupBy("_part")
-        .cogroup(rq.groupBy("_qpart"))
-        .applyInPandas(search_cogroup, schema="query_id long, _id long, distance double")
-    )
-    return _rank_topk(cand, k, id_col)
 
 
 def graph_exact_topk(
@@ -611,15 +638,16 @@ def graph_exact_topk(
     L2 rerank (``V.l2_distance``, the oracle's ``list_distance``) makes
     the emitted 6-dp distances bit-comparable, exactly the
     ``hamming_rerank_topk`` refine idiom. What the oracle match
-    certifies: graph build plumbing, cogrouped query routing, beam
-    expansion/termination, and the two-phase rank — everything but the
-    approximation itself, which ``ann_recall`` floors cover."""
+    certifies: graph build (``adjacency=None``: built in the search
+    cogroup), cogrouped query routing, beam expansion/termination, and
+    the two-phase rank — everything but the approximation itself, which
+    ``ann_recall`` floors cover."""
     from ..functions import vector as V
     from .knn import topk_per_query
 
-    shortlist = nsw_search(
-        embeddings, queries, k=k * expansion, m=m, ef=1 << 30,
-        id_col=id_col, vec_col=vec_col, build_method="exact",
+    shortlist = nsw_search_indexed(
+        embeddings, None, queries, k=k * expansion, ef=1 << 30,
+        id_col=id_col, vec_col=vec_col, build_method="exact", m=m,
     ).select("query_id", id_col)
     rescored = (
         shortlist.join(embeddings.select(id_col, vec_col), id_col)
@@ -637,55 +665,15 @@ def graph_exact_topk(
 # ---------------------------------------------------------- index lifecycle
 # Parity: dynamic_partition/hnsw/insertion.py / deletion.py — the reference
 # mutates a per-partition hnswlib index in place; here the adjacency is a
-# DataFrame (part, id, neighbors) and every mutation is a partition-local
-# relational transform, so the maintenance unit (one partition) matches and
-# the index itself survives as ordinary columnar storage.
-
-
-def build_nsw_graph(
-    blocks: DataFrame,
-    m: int = 8,
-    id_col: str = "block_id",
-    vec_col: str = "vector",
-    part_col: str | None = None,
-    build_method: str = "auto",
-) -> DataFrame:
-    """Materialize the per-partition adjacency as a DataFrame
-    ``(part, id, neighbors array<bigint>)`` — the persisted index. The
-    build is incremental-insert above the size crossover (hnswbuild.c
-    parity — O(n·ef·m), no quadratic cliff) and exact blocked-BLAS below
-    it; both carry the ring backbone."""
-    src = blocks.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        (F.col(part_col) if part_col else F.lit(0).cast("long")).alias("part"),
-    )
-    # the part column keeps ITS OWN type (long grid parts, string
-    # comb_role keys alike) — the output schema mirrors the input
-    part_type = src.schema["part"].dataType.simpleString()
-
-    def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_id").reset_index(drop=True)
-        vecs = np.stack(pdf["_vec"].values).astype(np.float64)
-        ids = pdf["_id"].to_numpy()
-        adj = _build_adjacency(vecs, m, method=build_method)
-        part = pdf["part"].iloc[0]
-        return pd.DataFrame(
-            {
-                "part": part,
-                "id": ids,
-                "neighbors": [[int(ids[v]) for v in a] for a in adj],
-            }
-        )
-
-    return src.groupBy("part").applyInPandas(
-        build_group, schema=f"part {part_type}, id long, neighbors array<long>"
-    )
+# DataFrame (part, id, neighbors) built by build_acorn_graph, and every
+# mutation is a partition-local relational transform, so the maintenance
+# unit (one partition) matches and the index itself survives as ordinary
+# columnar storage.
 
 
 def nsw_search_indexed(
     blocks: DataFrame,
-    adjacency: DataFrame,
+    adjacency: DataFrame | None,
     queries: DataFrame,
     k: int = 10,
     ef: int = 48,
@@ -696,73 +684,44 @@ def nsw_search_indexed(
     m: int = 8,
     stale: str = "rebuild",
 ) -> DataFrame:
-    """Search a PREBUILT adjacency (no rebuild per query batch): vectors
-    join their neighbor lists on the id key inside each partition, queries
-    replicate per partition as a relation (no driver collect), and the
-    beam runs exactly as in :func:`nsw_search`.
+    """Beam-search every query against every partition's NSW graph; merge
+    with a global rank window (two-phase top-k). ``part_col=None`` treats
+    the corpus as one partition (toy scale); with a partition column each
+    group searches its own graph in parallel. Queries flow as a RELATION:
+    replicated per partition with a broadcast of the (tiny) partition
+    list, then cogrouped against the blocks — no driver collect, so a
+    10⁶-query batch behaves like any other join.
+
+    ``adjacency`` is a PREBUILT :func:`build_acorn_graph` (γ=1) table:
+    vectors join their neighbor lists on the id key inside each
+    partition and nothing is rebuilt per query batch. ``None`` means no
+    index: every partition builds its graph inside the search cogroup —
+    right for one-shot batches and for the exactness certification (the
+    build is part of what the oracle certifies).
 
     ``m`` and ``build_method`` must match the knobs the index was built
-    with — they parameterize ONLY the stale-partition rebuild below, and
-    a mismatch would make a rebuilt partition's graph sparser/denser than
-    its fresh siblings. Staleness is detected in both directions (blocks
-    missing from the index, or stored edges to removed blocks — see
+    with — they parameterize the in-cogroup build, and a mismatch would
+    make a rebuilt partition's graph sparser/denser than its fresh
+    siblings. Staleness is detected in both directions (blocks missing
+    from the index, or stored edges to removed blocks — see
     :func:`_pos_mapped_or_stale`); ``stale='rebuild'`` (default) rebuilds
     that partition in-cogroup so search never silently drops blocks,
     ``stale='error'`` raises instead (certification paths fail loudly
     when index maintenance lost a block)."""
     if stale not in ("rebuild", "error"):
         raise ValueError(f"unknown stale policy {stale!r}")
-    src = blocks.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        # literal cast to long: _single_part's key is long, and the
-        # cogroup's two grouping keys must agree in type (implicit
-        # int→long coercion is version-fragile)
-        (F.col(part_col) if part_col else F.lit(0).cast("long")).alias("_part"),
-    ).join(
-        # corpus-sized ⋈ corpus-sized on the same key: hash-join hint —
-        # the applyInPandas output has no size stats and would SMJ
-        adjacency.select(
-            F.col("part").alias("_part"), F.col("id").alias("_id"), "neighbors"
-        ).hint("SHUFFLE_HASH"),
-        ["_part", "_id"],
-        "left",
+    src = _join_index(
+        blocks.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).alias("_vec"),
+            _part_key(part_col, "_part"),
+        ),
+        adjacency,
     )
-    # partition values from the CORPUS (column-pruned scan, the fused
-    # path's source) — not from src (the corpus⋈adjacency join, which
-    # Catalyst would execute twice) and not from the adjacency (a stale
-    # index missing an entire partition would stop queries reaching that
-    # partition's blocks — the rebuild fallback needs the queries there)
-    parts_from = (
-        _single_part(blocks.sparkSession) if part_col is None
-        else blocks.select(F.col(part_col).alias("_part"))
-    )
-    rq = _replicate_queries(src, queries.select("query_id", "query_vector"), parts_from)
+    rq = _replicate_queries(blocks, queries.select("query_id", "query_vector"), part_col)
 
     def search_cogroup(blocks_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(blocks_pdf) == 0 or len(q_pdf) == 0:
-            return pd.DataFrame(columns=["query_id", "_id", "distance"])
-        blocks_pdf = blocks_pdf.sort_values("_id").reset_index(drop=True)
-        vecs = np.stack(blocks_pdf["_vec"].values).astype(np.float64)
-        ids = blocks_pdf["_id"].to_numpy()
-        adjarr = _pos_mapped_or_stale(blocks_pdf["neighbors"].values, ids, stale)
-        if adjarr is None:  # stale partition → in-cogroup rebuild
-            adjarr = _build_adjacency(vecs, m, method=build_method)
-        norms = (vecs * vecs).sum(axis=1)
-        qids = q_pdf["query_id"].to_numpy()
-        qmat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in q_pdf["query_vector"].values]
-        )
-        entries = _batched_entries(vecs, norms, qmat)
-        found = _batched_beams(
-            vecs, norms, qmat, entries, k, ef, lambda i, u: adjarr[u]
-        )
-        rows = [
-            (int(qids[i]), int(ids[u]), float(np.sqrt(max(d2, 0.0))))
-            for i, res in enumerate(found)
-            for d2, u in res
-        ]
-        return pd.DataFrame(rows, columns=["query_id", "_id", "distance"])
+        return _nsw_partition_search(blocks_pdf, q_pdf, k, ef, m, build_method, stale)
 
     cand = (
         src.groupBy("_part")
@@ -796,13 +755,11 @@ def insert_into_graph(
     ef_c0 = ef_construction
     src_old = blocks.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("_vec"),
-        (F.col(part_col) if part_col else F.lit(0).cast("long")).alias("part"),
-        F.lit(False).alias("_new"),
+        _part_key(part_col, "part"), F.lit(False).alias("_new"),
     )
     src_new = new_blocks.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("_vec"),
-        (F.col(part_col) if part_col else F.lit(0).cast("long")).alias("part"),
-        F.lit(True).alias("_new"),
+        _part_key(part_col, "part"), F.lit(True).alias("_new"),
     )
     touched = src_new.select("part").distinct()
     src = src_old.join(F.broadcast(touched), "part", "left_semi").unionByName(src_new).join(
@@ -810,11 +767,9 @@ def insert_into_graph(
     )
 
     def insert_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("id").reset_index(drop=True)
+        pdf, vecs, ids = _sorted_partition(pdf, "id", "_vec")
         part = pdf["part"].iloc[0]  # native type: long grid parts OR string comb_role keys
-        vecs = np.stack(pdf["_vec"].values).astype(np.float64)
         norms = (vecs * vecs).sum(axis=1)
-        ids = pdf["id"].to_numpy()
         pos = {int(i): p for p, i in enumerate(ids)}
         is_new = pdf["_new"].to_numpy()
         adj: list[set[int]] = [set() for _ in range(len(ids))]
@@ -851,7 +806,7 @@ def insert_into_graph(
             }
         )
 
-    # mirror the part column's own type (build_nsw_graph generalization —
+    # mirror the part column's own type (as build_acorn_graph does —
     # string comb_role keys maintain through the same insert path)
     part_type = src.schema["part"].dataType.simpleString()
     updated = src.groupBy("part").applyInPandas(
@@ -865,7 +820,7 @@ def delete_from_graph(adjacency: DataFrame, delete_ids: DataFrame) -> DataFrame:
     """Delete (deletion.py parity): drop the nodes and filter them out of
     every neighbor list — a narrow map plus one broadcast anti-join; heavy
     deletions degrade connectivity, and the repair unit is a partition
-    rebuild (build_nsw_graph on that partition), exactly the reference's
+    rebuild (build_acorn_graph on that partition), exactly the reference's
     heavy-partition-refine escalation."""
     gone = F.broadcast(delete_ids.select(F.col(delete_ids.columns[0]).alias("_gone")))
     gone_arr = delete_ids.select(
@@ -909,7 +864,7 @@ def knn_dynamic_graph(
     against the exact ``knn_dynamic`` answer.
 
     ``adjacency`` optionally supplies a PREBUILT per-partition graph
-    (:func:`build_nsw_graph` over the store with
+    (:func:`build_acorn_graph` over the store with
     ``part_col='comb_role'``) — the build-once/search-many path, exactly
     how the reference maintains one hnswlib index per partition offline;
     with ``None`` each routed partition builds its graph in-cogroup.
@@ -930,56 +885,17 @@ def knn_dynamic_graph(
     )
 
     def search_cogroup(blocks_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(blocks_pdf) == 0 or len(q_pdf) == 0:
-            return pd.DataFrame(columns=["query_id", "block_id", "document_id", "distance"])
-        blocks_pdf = blocks_pdf.sort_values("block_id").reset_index(drop=True)
-        vecs = np.stack(blocks_pdf["vector"].values).astype(np.float64)
-        ids = blocks_pdf["block_id"].to_numpy()
-        docs = blocks_pdf["document_id"].to_numpy()
-        # prebuilt per-partition graph: pos-map the stored id lists
-        # (nsw_search_indexed idiom) — no in-cogroup rebuild unless the
-        # index is stale in EITHER direction (store blocks missing from
-        # the graph arrive as nulls through the left join; stored edges
-        # to removed blocks would silently strip connectivity), in which
-        # case the partition rebuilds so RBAC exactness never silently
-        # loses blocks
-        adjarr = (
-            _pos_mapped_or_stale(blocks_pdf["neighbors"].values, ids, "rebuild")
-            if "neighbors" in blocks_pdf.columns else None
+        # a stale partition (EITHER direction) rebuilds so RBAC exactness
+        # never silently loses blocks
+        return _nsw_partition_search(
+            blocks_pdf, q_pdf, k, ef, m, build_method, "rebuild",
+            id_key="block_id", vec_key="vector", carry=("document_id",),
         )
-        if adjarr is None:
-            adjarr = _build_adjacency(vecs, m, method=build_method)
-        norms = (vecs * vecs).sum(axis=1)
-        qids = q_pdf["query_id"].to_numpy()
-        qmat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in q_pdf["query_vector"].values]
-        )
-        entries = _batched_entries(vecs, norms, qmat)
-        found = _batched_beams(
-            vecs, norms, qmat, entries, k, ef, lambda i, u: adjarr[u]
-        )
-        rows = [
-            (int(qids[i]), int(ids[u]), int(docs[u]), float(np.sqrt(max(d2, 0.0))))
-            for i, res in enumerate(found)
-            for d2, u in res
-        ]
-        return pd.DataFrame(rows, columns=["query_id", "block_id", "document_id", "distance"])
 
-    src = store.select("comb_role", "block_id", "document_id", "vector")
-    if adjacency is not None:
-        # corpus-sized ⋈ corpus-sized on the same key: hash-join hint —
-        # the applyInPandas output has no size stats and would SMJ.
-        # LEFT join: a store block missing from a stale adjacency keeps a
-        # null neighbor list, which flips its partition to the in-cogroup
-        # rebuild above — never a silent drop
-        src = src.join(
-            adjacency.select(
-                F.col("part").alias("comb_role"), F.col("id").alias("block_id"),
-                "neighbors",
-            ).hint("SHUFFLE_HASH"),
-            ["comb_role", "block_id"],
-            "left",
-        )
+    src = _join_index(
+        store.select("comb_role", "block_id", "document_id", "vector"),
+        adjacency, part="comb_role", id_="block_id",
+    )
     cand = (
         src.groupBy("comb_role")
         .cogroup(routed_q.groupBy("comb_role"))
@@ -988,20 +904,11 @@ def knn_dynamic_graph(
             schema="query_id long, block_id long, document_id long, distance double",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("distance", 6).asc(), F.col("block_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "block_id", "document_id",
-                F.round("distance", 6).alias("distance"), "rank")
-    )
+    return _rank_topk(cand, k, "block_id", id_key="block_id", carry=("document_id",))
 
 
 # ------------------------------------------------------------------ ACORN
-def _acorn_beam(vecs, adj, q, k, ef, allowed, expand_2hop=True, norms=None,
-                max_hops=None):
+def _acorn_beam(vecs, adj, q, k, ef, allowed, norms=None, max_hops=None):
     """Predicate-aware best-first beam (ACORN-1, Patel et al. 2024,
     arXiv:2403.04871 — the algorithm behind the reference's
     acorn_benchmark/): the beam and frontier hold only PASSING nodes, but
@@ -1011,7 +918,7 @@ def _acorn_beam(vecs, adj, q, k, ef, allowed, expand_2hop=True, norms=None,
     batched, as in :func:`_beam_search`.
 
     ``max_hops`` generalizes the expansion depth: ``None`` keeps the
-    ACORN-1 semantics (1 or 2 hops per ``expand_2hop``); an integer h
+    ACORN-1 semantics (passing neighbors plus the 2-hop detour); an integer h
     BFS-expands through failing runs up to h nodes deep, with a PER-QUERY
     memo so every failing node is traversed at most once per query (total
     expansion work O(E), not O(E·visits)). With h ≥ n and ef ≥ n this is
@@ -1046,12 +953,12 @@ def _acorn_beam(vecs, adj, q, k, ef, allowed, expand_2hop=True, norms=None,
             # canonical candidate order: passing 1-hop neighbors first
             # (adjacency order), then passing 2-hop candidates reached
             # THROUGH failing neighbors — matches the vectorized closure
-            # in acorn_search so the lockstep driver is pin-equal
+            # in _acorn_masked_search so the lockstep driver is pin-equal
             two: list[int] = []
             for v in adj[u]:
                 if allowed[v]:
                     cand.append(v)
-                elif expand_2hop:
+                else:
                     two.extend(w for w in adj[v] if allowed[w])
             cand.extend(two)
         else:
@@ -1084,26 +991,6 @@ def _acorn_beam(vecs, adj, q, k, ef, allowed, expand_2hop=True, norms=None,
                 if len(beam) > ef:
                     heapq.heappop(beam)
     return _beam_cut(beam, k)
-
-
-def _sorted_neighbors(vecs: np.ndarray, adj: list[list[int]],
-                      norms: np.ndarray) -> list[np.ndarray]:
-    """Each node's neighbor list ordered by distance to the node (ties by
-    id — deterministic). ACORN-γ's search-time truncation semantics need
-    this order: "keep the first M PASSING neighbors" only approximates the
-    filtered-graph edge set when the list is distance-sorted (§4.2 of the
-    paper; hnswlib stores lists in insert order, ACORN re-sorts). One
-    gathered GEMV per node — O(E) total, part of the build."""
-    out = []
-    for u, nb in enumerate(adj):
-        if len(nb) == 0:
-            out.append(np.empty(0, dtype=np.int64))
-            continue
-        nv = np.asarray(nb, dtype=np.int64)
-        d2 = norms[nv] - 2.0 * (vecs[nv] @ vecs[u]) + norms[u]
-        order = np.lexsort((nv, d2))
-        out.append(nv[order])
-    return out
 
 
 def _diverse_sorted_neighbors(vecs: np.ndarray, adj: list[list[int]],
@@ -1141,32 +1028,24 @@ def _diverse_sorted_neighbors(vecs: np.ndarray, adj: list[list[int]],
     return out
 
 
-def _order_gamma_lists(vecs, adj, norms, neighbor_order: str):
-    """Order each γ-list for the "first m passing" truncation:
-    ``"diverse"`` (default — diverse-first, scale-safe) or
-    ``"distance"`` (the paper's literal §4.2 re-sort)."""
-    if neighbor_order == "diverse":
-        return _diverse_sorted_neighbors(vecs, adj, norms)
-    if neighbor_order == "distance":
-        return _sorted_neighbors(vecs, adj, norms)
-    raise ValueError(f"unknown neighbor_order {neighbor_order!r}")
-
-
-def _pos_mapped_or_stale(neighbor_lists, ids, stale: str):
+def _pos_mapped_or_stale(blocks_pdf: pd.DataFrame, ids, stale: str):
     """Map a partition's stored neighbor-id lists to positions in the
     sorted id array, detecting staleness in BOTH directions: a null list
     (block missing from the index — corpus grew since the build) or an
     edge to an id absent from the corpus (block removed since the build —
     silently stripping the edge could break ring connectivity and with it
     the ef ≥ n exhaustiveness proofs). Returns the pos-mapped
-    ``list[np.ndarray]`` when the index is fresh; ``None`` when stale and
-    ``stale == 'rebuild'`` (the caller rebuilds in-cogroup); raises when
+    ``list[np.ndarray]`` when the index is fresh; ``None`` when the search
+    has no index (no ``neighbors`` column) or it is stale and
+    ``stale == 'rebuild'`` (the caller builds in-cogroup); raises when
     stale and ``stale == 'error'`` (certification paths fail loudly
     instead of papering over lost index maintenance)."""
+    if "neighbors" not in blocks_pdf.columns:
+        return None
     why = None
     out: list[np.ndarray] = []
     pos = {int(i): p for p, i in enumerate(ids)}
-    for nbrs in neighbor_lists:
+    for nbrs in blocks_pdf["neighbors"].values:
         # Arrow nulls surface as None or NaN depending on the column path
         if nbrs is None or not hasattr(nbrs, "__len__"):
             why = "blocks missing from the index (null neighbor list)"
@@ -1183,23 +1062,23 @@ def _pos_mapped_or_stale(neighbor_lists, ids, stale: str):
     return None
 
 
-def _acorn_partition_adjacency(vecs, norms, m, gamma, build_method, neighbor_order):
-    """The ONE ACORN partition-adjacency build — the fused
-    :func:`acorn_search`, the offline :func:`build_acorn_graph`, and the
-    indexed searches' stale-partition rebuild all call this single
-    implementation, so the pytest-pinned indexed ≡ fused ≡ rebuilt
-    equalities stay atomic under knob changes.
+def _acorn_partition_adjacency(vecs, norms, m, gamma, build_method):
+    """The ONE ACORN partition-adjacency build — the offline
+    :func:`build_acorn_graph` and the in-cogroup build of
+    :func:`acorn_search_indexed` (no index, or a stale partition) both
+    call this single implementation, so the pytest-pinned indexed ≡
+    in-cogroup equalities stay atomic under knob changes.
 
-    γ>1 returns the UNPRUNED nearest-γ·m lists ordered by
-    ``neighbor_order`` (the paper removes the RNG/diversity pruning
-    precisely because it is predicate-agnostic: a pruned near neighbor
-    may be the only passing one); the exact build IS that list, so
-    γ-mode raises the auto crossover to 8× (r7: at 20k real vectors the
-    blocked-BLAS exact build is 3× FASTER than the degree-γm insert loop
-    at equal recall — the memory-bounded d² slab keeps it safe); beyond
-    it the heuristic incremental build at degree γm is the documented
-    fallback (measured: −0.05..−0.15 recall at selectivity ≤ 0.2).
-    γ=1 returns the diverse (hnswlib-heuristic) m-graph."""
+    γ>1 returns the UNPRUNED nearest-γ·m lists ordered diverse-first (see
+    :func:`_diverse_sorted_neighbors`; the paper removes the
+    RNG/diversity pruning precisely because it is predicate-agnostic: a
+    pruned near neighbor may be the only passing one); the exact build IS
+    that list, so γ-mode raises the auto crossover to 8× (r7: at 20k real
+    vectors the blocked-BLAS exact build is 3× FASTER than the degree-γm
+    insert loop at equal recall — the memory-bounded d² slab keeps it
+    safe); beyond it the heuristic incremental build at degree γm is the
+    documented fallback (measured: −0.05..−0.15 recall at selectivity ≤
+    0.2). γ=1 returns the diverse (hnswlib-heuristic) m-graph."""
     if gamma > 1:
         method = build_method
         if method == "auto":
@@ -1207,9 +1086,8 @@ def _acorn_partition_adjacency(vecs, norms, m, gamma, build_method, neighbor_ord
                 "exact" if vecs.shape[0] <= 8 * EXACT_BUILD_MAX
                 else "incremental"
             )
-        return _order_gamma_lists(
-            vecs, _build_adjacency(vecs, m * gamma, method=method),
-            norms, neighbor_order,
+        return _diverse_sorted_neighbors(
+            vecs, _build_adjacency(vecs, m * gamma, method=method), norms
         )
     return _build_adjacency(vecs, m, method=build_method)
 
@@ -1217,7 +1095,7 @@ def _acorn_partition_adjacency(vecs, norms, m, gamma, build_method, neighbor_ord
 def _acorn_gamma_beam(vecs, adj_sorted, q, k, ef, allowed, m, norms=None):
     """ACORN-γ traversal (Patel et al. 2024 §4.2): the graph was built
     DENSER (degree ≈ γ·m) and expansion of a node keeps the first ``m``
-    PASSING entries of its distance-sorted neighbor list — predicate-
+    PASSING entries of its γ-ordered neighbor list — predicate-
     dependent neighbor-list truncation instead of ACORN-1's 2-hop
     detours. Down to selectivity ≈ 1/γ the truncated lists have the same
     expected degree the unfiltered graph would, so recall holds with NO
@@ -1288,8 +1166,7 @@ def _with_query_roles(queries: DataFrame, query_roles: DataFrame) -> DataFrame:
     """Queries + their role sets as ONE relation (roles folded to an
     array column). The aggregate is dim-sized (one row per query) but
     erases size stats, so it is broadcast explicitly — a derived queries
-    side would otherwise fall to SortMergeJoin. Shared by the fused and
-    indexed ACORN searches."""
+    side would otherwise fall to SortMergeJoin."""
     return queries.select("query_id", "query_vector").join(
         F.broadcast(
             query_roles.groupBy("query_id").agg(
@@ -1301,132 +1178,25 @@ def _with_query_roles(queries: DataFrame, query_roles: DataFrame) -> DataFrame:
     )
 
 
-def acorn_search(
-    blocks: DataFrame,
-    queries: DataFrame,
-    query_roles: DataFrame,
-    k: int = 10,
-    m: int = 8,
-    ef: int = 48,
-    id_col: str = "block_id",
-    vec_col: str = "vector",
-    part_col: str | None = None,
-    expand_2hop: bool = True,
-    build_method: str = "auto",
-    gamma: int = 1,
-    max_hops: int | None = None,
-    permissions: DataFrame | None = None,
-    neighbor_order: str = "diverse",
-) -> DataFrame:
-    """D5 completed as REAL predicate-aware graph traversal: one graph
-    over the (un-partitioned) corpus, the RBAC predicate evaluated per
-    node DURING the beam search (ACORN-1 2-hop expansion) — the
-    mid-selectivity regime where prefilter scans too much and a
-    role-aligned partition layout doesn't exist. Complements the
-    cost-model router in plans/strategy.py: that picks BETWEEN
-    prefilter/postfilter; this searches WITH the filter in the graph.
-
-    Queries and their role sets flow as ONE relation (roles folded to an
-    array column, replicated per partition, cogrouped) — no driver
-    collect. The predicate is evaluated FROM METADATA, the way the
-    reference's acorn_benchmark/ evaluates predicates from actual
-    permission tables: each block carries the role set of its document
-    as an array column, and a node passes for a query iff the two role
-    sets intersect. ``permissions`` supplies that metadata as a
-    relation — any ``(role_id, document_id)`` PermissionAssignment
-    table, grouped per document and joined to the blocks (SHUFFLE_HASH;
-    co-locatable by bucketing both sides on document_id at scale).
-    With ``permissions=None`` the SAME metadata is built by the
-    testdata's arithmetic rule (SURVEY §4: doc % 10 and (doc+3) % 10) —
-    a default builder, not a baked-in predicate: the traversal itself
-    never sees the rule. Approximate op ⇒ recall-checked like the
-    other graph members.
-
-    ``gamma`` > 1 switches to ACORN-γ (the reference's
-    acorn_benchmark/ denser-graph variant): the partition graph is built
-    with degree ≈ γ·m and each expansion keeps the first ``m`` passing
-    entries of the node's distance-sorted neighbor list — no 2-hop
-    detours, recall held by graph density instead (good down to
-    selectivity ≈ 1/γ). ``max_hops`` (γ=1 only) deepens the ACORN-1
-    expansion through failing runs; ``max_hops ≥ n`` with ``ef ≥ n`` is
-    provably exhaustive over the allowed set (see :func:`_acorn_beam`),
-    which :func:`acorn_exact_topk` uses for the oracle certification.
-
-    ``neighbor_order`` (γ>1 only) picks the γ-list order the truncation
-    walks: ``"diverse"`` (default) emits each node's hnswlib-heuristic
-    DIVERSE edges first so that at high selectivity the truncated graph
-    is the navigable diverse m-graph rather than a nearest-m kNN graph
-    (see :func:`_diverse_sorted_neighbors` — at sf1/20k the distance
-    order loses 0.17 recall at γ=2); ``"distance"`` is the paper's
-    literal §4.2 re-sort.
-    """
-    with_roles, droles_col = _with_role_meta(blocks, permissions)
-    src = with_roles.select(
-        F.col(id_col).alias("_id"),
-        droles_col.alias("_droles"),
-        F.col(vec_col).alias("_vec"),
-        # literal cast to long: _single_part's key is long, and the
-        # cogroup's two grouping keys must agree in type (implicit
-        # int→long coercion is version-fragile)
-        (F.col(part_col) if part_col else F.lit(0).cast("long")).alias("_part"),
-    )
-    q_with_roles = _with_query_roles(queries, query_roles)
-    parts_from = (
-        _single_part(blocks.sparkSession) if part_col is None
-        else blocks.select(F.col(part_col).alias("_part"))
-    )
-    rq = _replicate_queries(src, q_with_roles, parts_from)
-
-    def search_cogroup(blocks_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(blocks_pdf) == 0 or len(q_pdf) == 0:
-            return pd.DataFrame(columns=["query_id", "_id", "distance"])
-        blocks_pdf = blocks_pdf.sort_values("_id").reset_index(drop=True)
-        vecs = np.stack(blocks_pdf["_vec"].values).astype(np.float64)
-        ids = blocks_pdf["_id"].to_numpy()
-        norms = (vecs * vecs).sum(axis=1)
-        # the ONE adjacency build (see _acorn_partition_adjacency): γ>1
-        # yields the ordered unpruned γ·m lists — passed as both the
-        # membership adjacency and the search order, exactly as the
-        # indexed path passes its stored lists (pytest-pinned equal)
-        adj = _acorn_partition_adjacency(
-            vecs, norms, m, gamma, build_method, neighbor_order
-        )
-        return _acorn_masked_search(
-            vecs, ids, norms, adj, adj if gamma > 1 else None,
-            blocks_pdf["_droles"].values, q_pdf,
-            k, ef, m, gamma, expand_2hop, max_hops,
-        )
-
-    cand = (
-        src.groupBy("_part")
-        .cogroup(rq.groupBy("_qpart"))
-        .applyInPandas(search_cogroup, schema="query_id long, _id long, distance double")
-    )
-    return _rank_topk(cand, k, id_col)
-
-
 def _acorn_masked_search(
     vecs: np.ndarray,
     ids: np.ndarray,
     norms: np.ndarray,
     adj: list[np.ndarray],
-    adj_sorted,
     droles,
     q_pdf: pd.DataFrame,
     k: int,
     ef: int,
     m: int,
     gamma: int,
-    expand_2hop: bool,
     max_hops: int | None,
 ) -> pd.DataFrame:
-    """Shared partition-local ACORN traversal: per-UNIQUE-role-set allowed
-    masks (chunked so the mask block stays ≤ ~32 MB), two-level entry
-    routing above the build crossover, and the lockstep batched beam with
-    the γ / 2-hop / failing-run expansion variants. Used by the fused
-    :func:`acorn_search` (adjacency built in-cogroup) and the persisted
-    :func:`acorn_search_indexed` (adjacency joined from the index
-    table)."""
+    """Partition-local ACORN traversal: per-UNIQUE-role-set allowed masks
+    (chunked so the mask block stays ≤ ~32 MB), two-level entry routing
+    above the build crossover, and the lockstep batched beam with the γ /
+    2-hop / failing-run expansion variants. For γ>1 ``adj`` holds the
+    ordered γ·m lists, which are both the membership adjacency and the
+    truncation order."""
     # flatten the per-node role arrays once per partition; each
     # query's allowed mask is then one vectorized membership test
     # over the flat (node, role) pairs — O(E) per query, no Python
@@ -1444,10 +1214,7 @@ def _acorn_masked_search(
     rnode = np.repeat(np.arange(len(droles)), rlens)
     # per-query allowed masks + allowed-medoid entry points; queries
     # whose permitted set is empty in this partition emit nothing
-    qids = q_pdf["query_id"].to_numpy()
-    qmat_full = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in q_pdf["query_vector"].values]
-    )
+    qids, qmat_full = _query_matrix(q_pdf)
     n_nodes = len(ids)
     roles_list = [
         [int(x) for x in rl] if rl is not None else []
@@ -1474,10 +1241,10 @@ def _acorn_masked_search(
     # allowed masks are bound per role-set chunk below
     if gamma > 1:
         # ACORN-γ expansion: first m PASSING entries of the node's
-        # distance-sorted neighbor list (see _sorted_neighbors)
+        # diverse-first neighbor list (see _diverse_sorted_neighbors)
         def make_expand(allowed_by_q):
             def expand(i, u):
-                nb = adj_sorted[u]
+                nb = adj[u]
                 if not nb.size:
                     return nb
                 return nb[allowed_by_q[i][nb]][:m]
@@ -1501,8 +1268,6 @@ def _acorn_masked_search(
                 nb = adj2d[u]
                 pm = al[nb]
                 passing = nb[pm]
-                if not expand_2hop:
-                    return passing
                 failing = nb[~pm]
                 if not failing.size:
                     return passing
@@ -1510,8 +1275,6 @@ def _acorn_masked_search(
                 return np.concatenate([passing, two[al[two]]])
             return expand
     else:
-        adjarr = adj
-
         def make_expand(allowed_by_q):
             # deep expansion through failing runs with a PER-QUERY
             # memo (bool array, allocated LAZILY on a query's first
@@ -1529,7 +1292,7 @@ def _acorn_masked_search(
                 if sf is None:
                     sf = seen_fail[i] = np.zeros(len(ids), dtype=bool)
                 out = []
-                layer = adjarr[u]
+                layer = adj[u]
                 depth = 1
                 while layer.size:
                     pm = al[layer]
@@ -1542,7 +1305,7 @@ def _acorn_masked_search(
                         break
                     failing = _first_unique(failing)
                     sf[failing] = True
-                    layer = np.concatenate([adjarr[int(v)] for v in failing])
+                    layer = np.concatenate([adj[int(v)] for v in failing])
                     depth += 1
                 return np.concatenate(out) if out else empty
             return expand
@@ -1632,36 +1395,37 @@ def build_acorn_graph(
     vec_col: str = "vector",
     part_col: str | None = None,
     build_method: str = "auto",
-    neighbor_order: str = "diverse",
 ) -> DataFrame:
-    """Materialize the ACORN adjacency as ``(part, id, neighbors)`` — the
-    build-once/search-many index the reference's acorn_benchmark/ builds
-    offline. γ=1 stores the diverse (hnswlib-heuristic) graph ACORN-1
-    traverses; γ>1 stores the UNPRUNED nearest-γ·m lists ordered for the
-    γ search's "first m passing" truncation (``neighbor_order``:
-    diverse-first by default, the paper's literal distance sort on
-    request — see :func:`acorn_search`), so the search gathers stored
-    order with no per-search re-sort. Same build crossovers as the fused
-    :func:`acorn_search` (γ-mode blocked-BLAS exact up to 8× the NSW
-    crossover)."""
+    """Materialize the per-partition adjacency as ``(part, id, neighbors
+    array<bigint>)`` — the build-once/search-many index the reference
+    builds offline (per-partition hnswlib, acorn_benchmark/). The build
+    is incremental-insert above the size crossover (hnswbuild.c parity —
+    O(n·ef·m), no quadratic cliff) and exact blocked-BLAS below it; both
+    carry the ring backbone.
+
+    γ=1 stores the diverse (hnswlib-heuristic) m-graph. That table is
+    both the ACORN-1 index and the NSW index that
+    :func:`nsw_search_indexed`, :func:`knn_dynamic_graph` and
+    :func:`insert_into_graph` read. γ>1 stores the UNPRUNED nearest-γ·m
+    lists in diverse-first order for the γ search's "first m passing"
+    truncation (see :func:`_acorn_partition_adjacency`), so the search
+    gathers stored order with no per-search re-sort. The searches'
+    in-cogroup builds run the same code with the same knobs."""
 
     src = blocks.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
-        (F.col(part_col) if part_col else F.lit(0).cast("long")).alias("part"),
+        _part_key(part_col, "part"),
     )
     # the part column keeps ITS OWN type (long grid parts, string comb_role
-    # keys alike) — mirrors build_nsw_graph/insert_into_graph, so an ACORN
-    # index composes with the dynamic comb-role store (D4×D5)
+    # keys alike) — mirrors insert_into_graph, so an index composes with
+    # the dynamic comb-role store (D4×D5)
     part_type = src.schema["part"].dataType.simpleString()
 
     def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_id").reset_index(drop=True)
-        vecs = np.stack(pdf["_vec"].values).astype(np.float64)
-        ids = pdf["_id"].to_numpy()
+        pdf, vecs, ids = _sorted_partition(pdf, "_id", "_vec")
         adj = _acorn_partition_adjacency(
-            vecs, (vecs * vecs).sum(axis=1), m, gamma, build_method,
-            neighbor_order,
+            vecs, (vecs * vecs).sum(axis=1), m, gamma, build_method
         )
         part = pdf["part"].iloc[0]
         return pd.DataFrame(
@@ -1679,7 +1443,7 @@ def build_acorn_graph(
 
 def acorn_search_indexed(
     blocks: DataFrame,
-    adjacency: DataFrame,
+    adjacency: DataFrame | None,
     queries: DataFrame,
     query_roles: DataFrame,
     k: int = 10,
@@ -1688,23 +1452,50 @@ def acorn_search_indexed(
     id_col: str = "block_id",
     vec_col: str = "vector",
     part_col: str | None = None,
-    expand_2hop: bool = True,
     gamma: int = 1,
     max_hops: int | None = None,
     permissions: DataFrame | None = None,
     build_method: str = "auto",
-    neighbor_order: str = "diverse",
     stale: str = "rebuild",
 ) -> DataFrame:
-    """ACORN over a PREBUILT :func:`build_acorn_graph` adjacency — no
-    graph rebuild per query batch (nsw_search_indexed idiom): vectors and
-    role metadata join their stored neighbor lists on the id key inside
-    each partition, queries + role sets replicate as ONE relation, and
-    the traversal runs exactly as in :func:`acorn_search` (shared
-    :func:`_acorn_masked_search`). ``gamma``, ``m``, ``build_method``
-    and ``neighbor_order`` must match the build's knobs: γ>1 indexes
-    store ordered unpruned lists, γ=1 the diverse graph, and the stale
-    rebuild below reproduces the build with exactly these parameters.
+    """D5 as REAL predicate-aware graph traversal (ACORN, the reference's
+    acorn_benchmark/): the RBAC predicate is evaluated per node DURING
+    the beam search — the mid-selectivity regime where prefilter scans
+    too much and a role-aligned partition layout doesn't exist.
+    Complements the cost-model router in plans/strategy.py: that picks
+    BETWEEN prefilter/postfilter; this searches WITH the filter in the
+    graph. Approximate op ⇒ recall-checked like the other graph members.
+
+    ``adjacency`` is a PREBUILT :func:`build_acorn_graph` table: vectors
+    and role metadata join their stored neighbor lists on the id key
+    inside each partition, and nothing is rebuilt per query batch.
+    ``None`` means no index: every partition builds its graph inside the
+    search cogroup (the form :func:`acorn_exact_topk` certifies).
+    ``gamma``, ``m`` and ``build_method`` must match the build's knobs:
+    the in-cogroup build reproduces the index with exactly these
+    parameters.
+
+    Queries and their role sets flow as ONE relation (roles folded to an
+    array column, replicated per partition, cogrouped) — no driver
+    collect. The predicate is evaluated FROM METADATA, the way
+    acorn_benchmark/ evaluates predicates from actual permission tables:
+    each block carries the role set of its document as an array column,
+    and a node passes for a query iff the two role sets intersect.
+    ``permissions`` supplies that metadata as a relation — any
+    ``(role_id, document_id)`` PermissionAssignment table, grouped per
+    document and joined to the blocks. With ``permissions=None`` the SAME
+    metadata is built by the testdata's arithmetic rule (see
+    :func:`_with_role_meta`).
+
+    ``gamma=1`` is ACORN-1: the beam holds only passing nodes, and
+    expansion routes through failing neighbors to their neighbors (2-hop).
+    ``gamma`` > 1 is ACORN-γ, the denser-graph variant: degree ≈ γ·m and
+    each expansion keeps the first ``m`` passing entries of the node's
+    diverse-first neighbor list — no 2-hop detours, recall held by graph
+    density instead (good down to selectivity ≈ 1/γ). ``max_hops`` (γ=1
+    only) deepens the ACORN-1 expansion through failing runs;
+    ``max_hops ≥ n`` with ``ef ≥ n`` is provably exhaustive over the
+    allowed set (see :func:`_acorn_beam`).
 
     Staleness in EITHER direction is detected per partition: blocks
     missing from the index arrive with null neighbor lists through the
@@ -1713,64 +1504,38 @@ def acorn_search_indexed(
     (index ahead — silently stripping those edges could disconnect the
     ring the exactness proofs need). ``stale`` picks the response:
     ``'rebuild'`` (default) rebuilds that partition's graph in-cogroup
-    (the knn_dynamic_graph pattern — search never silently drops blocks
-    or degrades), ``'error'`` raises instead, for certification paths
-    that must FAIL LOUDLY when index maintenance lost a block rather
-    than paper over it with a rebuild. This is the production
-    search-many path; the fused build stays certified through
-    acorn_exact."""
+    (search never silently drops blocks or degrades), ``'error'`` raises
+    instead, for certification paths that must FAIL LOUDLY when index
+    maintenance lost a block rather than paper over it with a rebuild."""
     if stale not in ("rebuild", "error"):
         raise ValueError(f"unknown stale policy {stale!r}")
     with_roles, droles_col = _with_role_meta(blocks, permissions)
-    src = with_roles.select(
-        # the id join key casts to long (build_acorn_graph's schema
-        # stores id as long; implicit int→long coercion is
-        # version-fragile); the part key keeps ITS OWN type — the build
-        # mirrors it, so string comb_role parts compose (D4×D5)
-        F.col(id_col).cast("long").alias("_id"),
-        droles_col.alias("_droles"),
-        F.col(vec_col).alias("_vec"),
-        (F.col(part_col) if part_col else F.lit(0).cast("long")).alias("_part"),
-    ).join(
-        # corpus-sized ⋈ corpus-sized on the same key: hash-join hint —
-        # the applyInPandas output has no size stats and would SMJ
-        adjacency.select(
-            F.col("part").alias("_part"), F.col("id").alias("_id"), "neighbors"
-        ).hint("SHUFFLE_HASH"),
-        ["_part", "_id"],
-        "left",
+    src = _join_index(
+        with_roles.select(
+            # the id join key casts to long (build_acorn_graph's schema
+            # stores id as long; implicit int→long coercion is
+            # version-fragile); the part key keeps ITS OWN type — the
+            # build mirrors it, so string comb_role parts compose (D4×D5)
+            F.col(id_col).cast("long").alias("_id"),
+            droles_col.alias("_droles"),
+            F.col(vec_col).alias("_vec"),
+            _part_key(part_col, "_part"),
+        ),
+        adjacency,
     )
-    q_with_roles = _with_query_roles(queries, query_roles)
-    # partition values from the CORPUS (column-pruned scan, the fused
-    # path's source) — not from src (the corpus⋈adjacency join, which
-    # Catalyst would execute twice) and not from the adjacency (a stale
-    # index missing an entire partition would stop queries reaching that
-    # partition's blocks — the rebuild fallback needs the queries there)
-    parts_from = (
-        _single_part(blocks.sparkSession) if part_col is None
-        else blocks.select(F.col(part_col).alias("_part"))
-    )
-    rq = _replicate_queries(src, q_with_roles, parts_from)
+    rq = _replicate_queries(blocks, _with_query_roles(queries, query_roles), part_col)
 
     def search_cogroup(blocks_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(blocks_pdf) == 0 or len(q_pdf) == 0:
             return pd.DataFrame(columns=["query_id", "_id", "distance"])
-        blocks_pdf = blocks_pdf.sort_values("_id").reset_index(drop=True)
-        vecs = np.stack(blocks_pdf["_vec"].values).astype(np.float64)
-        ids = blocks_pdf["_id"].to_numpy()
+        blocks_pdf, vecs, ids = _sorted_partition(blocks_pdf, "_id", "_vec")
         norms = (vecs * vecs).sum(axis=1)
-        adj = _pos_mapped_or_stale(blocks_pdf["neighbors"].values, ids, stale)
-        if adj is None:  # stale partition → the ONE rebuild implementation
-            adj = _acorn_partition_adjacency(
-                vecs, norms, m, gamma, build_method, neighbor_order
-            )
+        adj = _pos_mapped_or_stale(blocks_pdf, ids, stale)
+        if adj is None:  # no index or a stale partition → build in-cogroup
+            adj = _acorn_partition_adjacency(vecs, norms, m, gamma, build_method)
         return _acorn_masked_search(
-            vecs, ids, norms, adj,
-            # stored order IS the search order for γ builds (diverse-first
-            # by default — see build_acorn_graph's neighbor_order)
-            adj if gamma > 1 else None,
-            blocks_pdf["_droles"].values, q_pdf,
-            k, ef, m, gamma, expand_2hop, max_hops,
+            vecs, ids, norms, adj, blocks_pdf["_droles"].values, q_pdf,
+            k, ef, m, gamma, max_hops,
         )
 
     cand = (
@@ -1801,15 +1566,16 @@ def acorn_exact_topk(
     is the exact permitted top-k·expansion. The JVM-side L2 rerank makes
     distances bit-comparable (graph_exact_topk idiom), so the oracle is
     the plain FILTERED brute force (prefilter SQL shape). What the match
-    certifies: predicate evaluation inside the traversal, failing-run
-    expansion, entry-point selection, and the rank — everything but the
-    approximation, which ``ann_recall``'s acorn members floor."""
+    certifies: the in-cogroup build (``adjacency=None``), predicate
+    evaluation inside the traversal, failing-run expansion, entry-point
+    selection, and the rank — everything but the approximation, which
+    ``ann_recall``'s acorn members floor."""
     from ..functions import vector as V
     from .knn import topk_per_query
 
     n_hint = 1 << 30
-    shortlist = acorn_search(
-        blocks, queries, query_roles, k=k * expansion, m=m, ef=n_hint,
+    shortlist = acorn_search_indexed(
+        blocks, None, queries, query_roles, k=k * expansion, m=m, ef=n_hint,
         id_col=id_col, vec_col=vec_col, build_method="exact",
         max_hops=n_hint, permissions=permissions,
     ).select("query_id", id_col)
