@@ -309,10 +309,8 @@ def q_rbac_topk_fast(spark, sf_dir):
 
 
 def q_cosine_topk(spark, sf_dir):
-    # impl="numpy": the Arrow pair kernel with per-batch pre-cut, pinned
-    # row-identical to the expression brute force (test_knn.py)
     t = _rbac(spark, sf_dir)
-    out = ann.cosine_topk_bruteforce(t["embeddings"], t["queries"], k=TOPK, impl="numpy")
+    out = ann.cosine_topk_bruteforce(t["embeddings"], t["queries"], k=TOPK)
     return _i(out, "query_id", "vec_id", "rank")
 
 
@@ -333,17 +331,14 @@ def q_halfvec_topk(spark, sf_dir):
     t = _rbac(spark, sf_dir)
     emb = t["embeddings"].select("vec_id", V.fp16_quantize("embedding").alias("embedding"))
     qs = t["queries"].select("query_id", V.fp16_quantize("query_vector").alias("query_vector"))
-    # quantization stays in the expression plan (the oracle's exact form);
-    # scoring rides the two-phase Arrow/BLAS kernel pinned ≡ expr
-    out = ann.l2_topk_bruteforce(emb, qs, k=TOPK, id_col="vec_id", impl="numpy")
+    out = ann.l2_topk_bruteforce(emb, qs, k=TOPK, id_col="vec_id")
     return _i(out, "query_id", "vec_id", "rank")
 
 
 def q_sparse_cosine_topk(spark, sf_dir):
     """Sparsevec cosine top-k over magnitude-sparsified embeddings."""
     t = _rbac(spark, sf_dir)
-    # impl="numpy": scatter-to-dense BLAS kernel pinned ≡ the sparse expr
-    out = ann.sparse_cosine_topk(t["embeddings"], t["queries"], k=TOPK, threshold=0.15, impl="numpy")
+    out = ann.sparse_cosine_topk(t["embeddings"], t["queries"], k=TOPK, threshold=0.15)
     return _i(out, "query_id", "vec_id", "rank")
 
 
@@ -849,8 +844,7 @@ def q_int8_topk(spark, sf_dir):
     """Int8-quantized brute-force top-k: integer dot products → bit-exact
     oracle (E19)."""
     t = _rbac(spark, sf_dir)
-    # impl="numpy": one int64 matmul per Arrow batch — bit-exact, pinned
-    out = curation.int8_topk(t["embeddings"], t["queries"], k=TOPK, impl="numpy")
+    out = curation.int8_topk(t["embeddings"], t["queries"], k=TOPK)
     return _i(out, "query_id", "vec_id")
 
 
@@ -1739,13 +1733,11 @@ def _truth_blocks(sf_dir, t):
 
 def _truth_emb(sf_dir, t):
     """Exact L2 ground truth over the embeddings table (pq/ivfpq share
-    it). Scored through the Arrow pair kernel pinned row-identical to
-    the expression fold (tuning._pair_scores — offline truths take the
-    throughput path, certified members keep the expression scan)."""
+    it), scored by the tuning curves' pair kernel (tuning._pair_scores)."""
     def build():
         from vectorsearch_rbac_spark.operators import tuning
 
-        scored = tuning._pair_scores(t["embeddings"], t["queries"], "numpy").select(
+        scored = tuning._pair_scores(t["embeddings"], t["queries"]).select(
             "query_id", F.col("vec_id").alias("block_id"), "distance"
         )
         return knn.topk_per_query(scored, TOPK).select(
@@ -1760,12 +1752,7 @@ def _truth_emb_cos(sf_dir, t):
     it); same offline-precompute rationale as _truth_emb."""
     return _cached(
         ("truth_emb_cos", sf_dir),
-        # impl="numpy": the Arrow kernel pinned row-identical to the expr
-        # path builds the offline truth ~10× faster at sf1; the certified
-        # global_topk member keeps the expression scan
-        lambda: ann.cosine_topk_bruteforce(
-            t["embeddings"], t["queries"], k=TOPK, impl="numpy"
-        )
+        lambda: ann.cosine_topk_bruteforce(t["embeddings"], t["queries"], k=TOPK)
         .withColumnRenamed("vec_id", "block_id")
         .localCheckpoint(),
     )
@@ -2017,11 +2004,8 @@ def q_pq_recall(spark, sf_dir):
         ("pq_B", sf_dir), lambda: pq.pq_train(emb, m=16, ksub=max(8, min(64, emb.count() // 8)))
     )
     codes = pq.pq_encode(emb, B)
-    # impl="numpy": Arrow ADC kernel for the recall member (ivf/lsh
-    # precedent) — the exact-certified expression shape stays under
-    # quantized_topk's pq_exact tag, pytest pins the two paths equal
     pred = pq.pq_search_refined(
-        codes, emb, qs, B, k=TOPK, expansion=8, impl="numpy"
+        codes, emb, qs, B, k=TOPK, expansion=8
     ).withColumnRenamed("vec_id", "block_id")
     # (pred, truth) argument order as in ivf/lsh_recall: a query missing
     # from pred scores recall 0 instead of silently dropping out of the mean
@@ -2046,11 +2030,8 @@ def q_ivfpq_recall(spark, sf_dir):
         lambda: pq.ivfpq_train(emb, C, m=16, ksub=max(8, min(64, emb.count() // 8))),
     )
     codes = pq.ivfpq_encode(emb, C, B)
-    # impl="numpy": Arrow residual-ADC kernel for the recall member —
-    # ivfpq_exact stays on the expression shape, pytest pins the paths
     pred = pq.ivfpq_search_refined(
         codes, emb, qs, C, B, k=TOPK, nprobe=max(2, (5 * nlists) // 8), expansion=8,
-        impl="numpy",
     ).withColumnRenamed("vec_id", "block_id")
     # exact truth over the same metric/table as pq_recall (shared + cached)
     truth = _truth_emb(sf_dir, t)
@@ -2069,14 +2050,10 @@ def q_lsh_recall(spark, sf_dir):
     # every driver sf (2k vectors) and steps to 8 at sf1's 20k, where the
     # fixed 32-bucket table degenerated to a near-brute-force candidate
     # union (185 s → the multiprobe fraction stays ~constant instead).
-    # impl="numpy" is the Arrow/BLAS throughput kernel (same bucketing
-    # scheme; the exact-certified expression path stays under
-    # global_topk 'lsh_exact').
     n_vec = t["embeddings"].count()
     n_planes = max(5, int(math.log2(max(n_vec / 62, 2))))
     pred = ann.cosine_topk_lsh(
         t["embeddings"], t["queries"], k=TOPK, n_planes=n_planes, n_tables=8,
-        impl="numpy",
     )
     truth = _truth_emb_cos(sf_dir, t)
     return knn.recall_at_k(
@@ -2324,28 +2301,6 @@ def q_ann_recall(spark, sf_dir):
     return out
 
 
-def q_ivf_tuning_curve(spark, sf_dir):
-    """D9 search-parameter tuning: the one-pass multi-nprobe
-    (recall@k, rows-scanned) curve that the {k, β}/{a, b} model fit and
-    ``choose_nprobe`` consume (reference ``get_parameter.py:188`` /
-    ``analysis_hnsw_recall.py:309`` parity; bench.py reports the fitted
-    models + chosen knob). Deterministic (seeded k-means, md5-derived
-    queries) but k-means centroids are float-iterative → no SQL oracle,
-    rows-only like the other approximate-op entries."""
-    from vectorsearch_rbac_spark.operators import tuning
-
-    t = _rbac(spark, sf_dir)
-    blocks = t["documentblocks"]
-    nlists = max(4, min(16, blocks.count() // 125))
-    C = _cached(("ivf_C", sf_dir), lambda: ivf.kmeans_fit(blocks, nlists=nlists, max_iter=8))
-    indexed = _cached(
-        ("ivf_indexed", sf_dir), lambda: ivf.assign_centroids(blocks, C).localCheckpoint()
-    )
-    truth = _truth_blocks(sf_dir, t)
-    curve = tuning.recall_cost_curve(indexed, t["queries"], C, truth, k=TOPK)
-    return _i(curve, "nprobe")
-
-
 def q_rbac_dynamic_budget_topk(spark, sf_dir):
     """D10 — the reference's headline optimizer: workload-weighted,
     storage-budgeted partition composition (AnonySys_dynamic_partition.py:425
@@ -2397,15 +2352,12 @@ def q_tuning_curve(spark, sf_dir):
         ("anchor_ivf_truth", sf_dir, TOPK),  # k in the key: a truth built
         # at a different depth would silently inflate the recall curve
         lambda: tuning.anchor_ivf_truth(
-            t["embeddings"], t["queries"], k=TOPK, impl="numpy"
+            t["embeddings"], t["queries"], k=TOPK
         ).localCheckpoint(),
     )
-    # impl="numpy": the Q·N scoring pass rides the Arrow kernel pinned
-    # row-identical to the expression fold (pq/lsh kernel precedent);
-    # the curve stays hash-green because the emitted values are the same
     out = tuning.anchor_ivf_curve(
         t["embeddings"], t["queries"], nlists=8, anchor_stride=37, k=TOPK,
-        truth=truth, impl="numpy",
+        truth=truth,
     )
     return _i(out, "nprobe")
 
@@ -2807,9 +2759,9 @@ def q_global_topk(spark, sf_dir):
     (registry curation): the two-phase numpy fast path (l2), the cosine
     brute-force baseline, the E8 hyperplane-LSH search run as an
     EXACT-oracle member ('lsh_exact', 5 planes × 2 tables, multiprobe
-    hamming-1: the planes are literal doubles shared with the SQL text
-    and DuckDB's list_inner_product reproduces the left-to-right sum
-    bit-for-bit, so the oracle replays bucketing → multiprobe →
+    hamming-1: the seeded planes are shared with the SQL text and
+    DuckDB's list_inner_product reproduces the kernel's left-to-right
+    fold bit-for-bit, so the oracle replays bucketing → multiprobe →
     candidate min-distance → rank value-for-value; only recall stays
     statistical, in `ann_recall`), and — r6 — 'text_embed' (E47): the
     whole text → hashed-word-vector-embed → cosine-search INGESTION
@@ -6006,11 +5958,11 @@ UNION ALL SELECT 'erbac', 'permission', a, b FROM e_pa
 """
 
 def _lsh_exact_sql() -> str:
-    """E8 LSH search replayed EXACTLY: the hyperplanes are the same literal
-    doubles the Spark plan carries (repr round-trips bit-for-bit), and
-    DuckDB's list_inner_product reproduces _dsum's left-to-right sum, so
-    bucket sign bits — the only unrounded float comparison — agree
-    bit-for-bit (verified 0/500 mismatches at sf0.01)."""
+    """E8 LSH search replayed EXACTLY: the hyperplanes are the same seeded
+    doubles the Spark kernel broadcasts (repr round-trips bit-for-bit),
+    and DuckDB's list_inner_product reproduces the kernel's left-to-right
+    fold from 0.0, so bucket sign bits — the only unrounded float
+    comparison — agree bit-for-bit."""
     from vectorsearch_rbac_spark.operators.ann import hyperplanes
 
     planes = {t: hyperplanes(64, 5, 42 + 1000 * t) for t in (0, 1)}

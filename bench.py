@@ -338,10 +338,7 @@ def _tuning_block(spark) -> dict:
     indexed = ivf.assign_centroids(blocks, C)
     truth = knn.knn_topk_fast(blocks, t["queries"], k=10)
     t0 = time.time()
-    # impl="numpy": the Q·N curve scoring rides the Arrow kernel pinned
-    # row-identical to the expression fold (same decision, same curve)
-    out = tuning.tune_ivf(indexed, t["queries"], C, truth, k=10,
-                          target_recall=0.9, impl="numpy")
+    out = tuning.tune_ivf(indexed, t["queries"], C, truth, k=10, target_recall=0.9)
     from pyspark.sql import functions as F
 
     # log-n QPS fit (analysis_hnsw_qps_logn.py parity): scan-cost points

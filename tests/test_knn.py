@@ -82,91 +82,173 @@ def test_lsh_recall_floor(t):
     assert rec >= 0.45
 
 
+def _nan_rows(df):
+    """Sorted result rows with NaN distances made comparable (NaN != NaN)."""
+    return sorted(
+        tuple("nan" if isinstance(x, float) and x != x else x for x in r)
+        for r in df.collect()
+    )
+
+
+def _ref_vec_topk(left, right, dist, k):
+    """Test-only expression reference for the single-id vector searches:
+    crossJoin, ``F.round`` of the codegen'd distance (+ 0.0 folds −0.0),
+    then the exact window top-k with id tie-breaks."""
+    scored = left.crossJoin(right).select(
+        "query_id", F.col("vec_id").alias("block_id"),
+        (F.round(dist, 6) + F.lit(0.0)).alias("distance"),
+    )
+    return knn.topk_per_query(scored, k).select(
+        "query_id", F.col("block_id").alias("vec_id"), "distance", "rank"
+    )
+
+
+def _ref_lsh(emb, queries, k, n_planes, n_tables, seed=42):
+    """Test-only LSH reference with hamming-1 multiprobe: bucket both
+    sides with ``ann.lsh_bucket`` per table, keep the (query, vector)
+    pairs whose buckets differ by at most one bit in some table, score
+    them with ``V.cosine_distance`` and take the window top-k."""
+    dim = len(emb.first()["embedding"])
+    probe = [0] + [1 << i for i in range(n_planes)]
+    pairs = None
+    for t in range(n_tables):
+        planes = ann.hyperplanes(dim, n_planes, seed + 1000 * t)
+        eb = ann.lsh_bucket(emb.select("vec_id", "embedding"), planes)
+        qb = ann.lsh_bucket(
+            queries.select("query_id", "query_vector"), planes, vec_col="query_vector",
+            out_col="qbucket",
+        )
+        p = eb.crossJoin(qb).where(
+            F.col("bucket").bitwiseXOR(F.col("qbucket")).isin(probe)
+        ).select("query_id", "vec_id")
+        pairs = p if pairs is None else pairs.union(p)
+    scored = (
+        pairs.distinct()
+        .join(emb.select("vec_id", "embedding"), "vec_id")
+        .join(queries.select("query_id", "query_vector"), "query_id")
+        .select(
+            "query_id", F.col("vec_id").alias("block_id"),
+            (F.round(V.cosine_distance("embedding", "query_vector"), 6) + F.lit(0.0)).alias("distance"),
+        )
+    )
+    return knn.topk_per_query(scored, k).select(
+        "query_id", F.col("block_id").alias("vec_id"), "distance", "rank"
+    )
+
+
 def test_lsh_numpy_kernel_matches_expr(t):
-    """The Arrow/BLAS LSH kernel (impl="numpy") and the oracle-replayable
-    expression path share one bucketing scheme; on the deterministic test
-    corpus they must return the same (query, id, distance, rank) rows.
-    (Sign ties at exactly 0.0 could differ in the last ulp between the
-    sequential and BLAS sums — measure-zero on real data, and the
-    exact-certified member stays on the expression path by design.)"""
-    kw = dict(k=10, n_planes=5, n_tables=4, multiprobe_hamming=1)
-    expr_rows = sorted(
-        (r[0], r[1], round(r[2], 6), r[3])
-        for r in ann.cosine_topk_lsh(t["embeddings"], t["queries"], **kw).collect()
-    )
-    np_rows = sorted(
-        (r[0], r[1], round(r[2], 6), r[3])
-        for r in ann.cosine_topk_lsh(t["embeddings"], t["queries"], impl="numpy", **kw).collect()
-    )
-    assert expr_rows == np_rows and len(np_rows) > 0
+    """The LSH kernel returns EXACTLY the expression reference's rows:
+    its sign bits fold x·h in ``V.inner_product``'s order, so bucketing
+    agrees bit for bit, and candidates score with the cosine fold."""
+    kw = dict(k=10, n_planes=5, n_tables=4)
+    got = _nan_rows(ann.cosine_topk_lsh(t["embeddings"], t["queries"], multiprobe_hamming=1, **kw))
+    want = _nan_rows(_ref_lsh(t["embeddings"], t["queries"], **kw))
+    assert got == want and len(want) > 0
 
 
 def test_cosine_bruteforce_numpy_matches_expr(t):
-    """The Arrow pair-scoring kernel behind the lsh truth build must
-    return EXACTLY the expression brute force's rows (j-order dot/norm
-    folds, NaN zero-norm parity, half-up round, −0.0 fold)."""
-    ke = sorted(
-        map(tuple, ann.cosine_topk_bruteforce(t["embeddings"], t["queries"], k=10).collect())
+    """The brute-force cosine kernel returns EXACTLY the expression
+    reference's rows (j-order dot/norm folds, NaN zero-norm parity,
+    half-up round, −0.0 fold)."""
+    emb, qs = t["embeddings"], t["queries"].select("query_id", "query_vector")
+    got = _nan_rows(ann.cosine_topk_bruteforce(emb, qs, k=10))
+    want = _nan_rows(_ref_vec_topk(emb, qs, V.cosine_distance("embedding", "query_vector"), 10))
+    assert got == want and len(want) > 0
+
+
+def _ref_pq_search(codes, queries, B, k):
+    """Test-only ADC reference: ``pq._subspace_luts`` tables per query,
+    then the j-order gather-sum from 0.0 as a codegen'd
+    aggregate(zip_with), ``F.round`` to 6 dp and the window top-k."""
+    from pyspark.sql import Window
+    from vectorsearch_rbac_spark.operators import pq
+    import numpy as np
+
+    rows = queries.select("query_id", "query_vector").collect()
+    L = pq._subspace_luts(np.array([r["query_vector"] for r in rows], dtype=np.float64), B)
+    luts = codes.sparkSession.createDataFrame(
+        [(r["query_id"], L[i].tolist()) for i, r in enumerate(rows)],
+        "query_id long, _luts array<array<double>>",
     )
-    kn = sorted(
-        map(tuple, ann.cosine_topk_bruteforce(
-            t["embeddings"], t["queries"], k=10, impl="numpy"
-        ).collect())
+    scored = codes.crossJoin(luts).select(
+        "query_id", "vec_id",
+        F.round(
+            F.aggregate(
+                F.zip_with("codes", "_luts", lambda c, l: F.element_at(l, c + 1)),
+                F.lit(0.0), lambda acc, x: acc + x,
+            ),
+            6,
+        ).alias("distance"),
     )
-    assert ke == kn and len(ke) > 0
+    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("vec_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(F.col("rank") <= k)
 
 
 def test_pq_numpy_kernel_matches_expr(t):
-    """The Arrow ADC kernel (pq_search impl="numpy") must return exactly
-    the expression path's rows: the gather-sum adds run in the same
-    j-order as the codegen fold (bit-identical float64 sums) and the cut
-    uses the same rounded (distance, id) order — so the pin is strict
-    row equality, shortlist AND refined output."""
+    """The Arrow ADC kernel (pq_search) returns exactly the expression
+    reference's rows: the gather-sum adds run in the same j-order as the
+    codegen fold (bit-identical float64 sums) and the cut uses the same
+    rounded (distance, id) order — strict row equality, shortlist AND
+    refined output."""
+    from pyspark.sql import Window
     from vectorsearch_rbac_spark.operators import pq
 
     emb, qs = t["embeddings"], t["queries"]
     B = pq.pq_train(emb, m=8, ksub=8)
-    codes = pq.pq_encode(emb, B)
-    expr_s = sorted(
-        (r[0], r[1], round(r[2], 6), r[3])
-        for r in pq.pq_search(codes, qs, B, k=12).collect()
-    )
-    np_s = sorted(
-        (r[0], r[1], round(r[2], 6), r[3])
-        for r in pq.pq_search(codes, qs, B, k=12, impl="numpy").collect()
-    )
-    assert expr_s == np_s and len(np_s) > 0
-    expr_r = sorted(
-        (r[0], r[1], round(r[2], 6), r[3])
-        for r in pq.pq_search_refined(codes, emb, qs, B, k=5, expansion=4).collect()
-    )
-    np_r = sorted(
-        (r[0], r[1], round(r[2], 6), r[3])
-        for r in pq.pq_search_refined(codes, emb, qs, B, k=5, expansion=4, impl="numpy").collect()
-    )
-    assert expr_r == np_r and len(np_r) > 0
+    codes = pq.pq_encode(emb, B).cache()
+    got = _nan_rows(pq.pq_search(codes, qs, B, k=12))
+    want = _nan_rows(_ref_pq_search(codes, qs, B, 12))
+    assert got == want and len(want) > 0
 
-    # same pin for the IVFADC (residual) kernel: probed-list masking,
-    # residual LUT gather, and the cut must reproduce the expr rows
+    short = _ref_pq_search(codes, qs, B, 5 * 4).select("query_id", "vec_id")
+    rescored = (
+        short.join(emb, "vec_id").join(qs.select("query_id", "query_vector"), "query_id")
+        .select("query_id", "vec_id",
+                F.round(V.l2_distance("embedding", "query_vector"), 6).alias("distance"))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("vec_id").asc())
+    want_r = _nan_rows(
+        rescored.withColumn("rank", F.row_number().over(w).cast("long")).where(F.col("rank") <= 5)
+    )
+    got_r = _nan_rows(pq.pq_search_refined(codes, emb, qs, B, k=5, expansion=4))
+    assert got_r == want_r and len(want_r) > 0
+
+    # degenerate parity: empty query side must yield empty, not raise
+    assert pq.pq_search(codes, qs.limit(0), B, k=5).count() == 0
     from vectorsearch_rbac_spark.operators import ivf
 
     C = ivf.kmeans_fit(emb, nlists=4, vec_col="embedding", max_iter=4)
     RB = pq.ivfpq_train(emb, C, m=8, ksub=8)
     rcodes = pq.ivfpq_encode(emb, C, RB)
-    kw = dict(k=5, nprobe=2, expansion=4)
-    expr_i = sorted(
-        (r[0], r[1], round(r[2], 6), r[3])
-        for r in pq.ivfpq_search_refined(rcodes, emb, qs, C, RB, **kw).collect()
-    )
-    np_i = sorted(
-        (r[0], r[1], round(r[2], 6), r[3])
-        for r in pq.ivfpq_search_refined(rcodes, emb, qs, C, RB, impl="numpy", **kw).collect()
-    )
-    assert expr_i == np_i and len(np_i) > 0
+    assert pq.ivfpq_search(rcodes, qs.limit(0), C, RB, k=5, nprobe=2).count() == 0
 
-    # degenerate parity: empty query side must yield empty, not raise
-    assert pq.pq_search(codes, qs.limit(0), B, k=5, impl="numpy").count() == 0
-    assert pq.ivfpq_search(rcodes, qs.limit(0), C, RB, k=5, nprobe=2, impl="numpy").count() == 0
+
+def test_ivfpq_lut_fallback_matches_kernel(t, monkeypatch):
+    """Above ``_IVFPQ_LUT_BROADCAST_MAX`` the residual LUT is not
+    broadcast as one tensor; ivfpq_search scores in the plan instead.
+    Forcing that path (constant set to 0) must return the kernel's rows,
+    for the raw ADC search and the refined search."""
+    from vectorsearch_rbac_spark.operators import ivf, pq
+
+    emb, qs = t["embeddings"], t["queries"]
+    C = ivf.kmeans_fit(emb, nlists=4, vec_col="embedding", max_iter=4)
+    RB = pq.ivfpq_train(emb, C, m=8, ksub=8)
+    rcodes = pq.ivfpq_encode(emb, C, RB).cache()
+    kw = dict(k=5, nprobe=2)
+
+    def run():
+        raw = pq.ivfpq_search(rcodes, qs, C, RB, **kw)
+        refined = pq.ivfpq_search_refined(rcodes, emb, qs, C, RB, expansion=4, **kw)
+        return raw, _nan_rows(raw), _nan_rows(refined)
+
+    kernel_df, kernel_raw, kernel_ref = run()
+    assert "MapInPandas" in kernel_df._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(pq, "_IVFPQ_LUT_BROADCAST_MAX", 0)
+    fb_df, fb_raw, fb_ref = run()
+    fb_plan = fb_df._jdf.queryExecution().executedPlan().toString()
+    assert "aggregate(zip_with" in fb_plan, "the fallback must score in the plan"
+    assert fb_raw == kernel_raw and len(kernel_raw) > 0
+    assert fb_ref == kernel_ref and len(kernel_ref) > 0
 
 
 def test_qdtree_search_exact(t):
@@ -1313,48 +1395,123 @@ def test_postfilter_numpy_kernel_matches_expr(t):
 
 def test_impl_keyword_is_compat_only(t):
     """``impl`` survives only on the four functions older callers pass it
-    to: "numpy" is accepted, anything else raises."""
+    to: "numpy" is accepted, anything else raises. No other public
+    operator function takes an ``impl`` keyword."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    from vectorsearch_rbac_spark import operators
+
     args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    for fn in (knn.knn_prefilter, knn.knn_postfilter, knn.knn_comb_role_partition, knn.knn_qdtree):
+    compat = (knn.knn_prefilter, knn.knn_postfilter, knn.knn_comb_role_partition, knn.knn_qdtree)
+    for fn in compat:
         with pytest.raises(ValueError, match="impl="):
             fn(*args, k=10, impl="expr")
     _assert_matches(knn.knn_prefilter(*args, k=10, impl="numpy"), _ref_permitted(*args, k=10))
 
+    with_impl = set()
+    for info in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if fn.__module__ == mod.__name__ and not name.startswith("_"):
+                if "impl" in inspect.signature(fn).parameters:
+                    with_impl.add(f"{info.name}.{name}")
+    assert with_impl == {f"knn.{fn.__name__}" for fn in compat}
+
 
 def test_l2_bruteforce_numpy_kernel_matches_expr(t):
-    """l2_topk_bruteforce numpy (two-phase BLAS) ≡ expr on the fp16-quantized
-    frames the halfvec entry feeds it."""
-    from vectorsearch_rbac_spark.functions import vector as V
-
+    """l2_topk_bruteforce (two-phase kernel) ≡ the expression reference
+    on the fp16-quantized frames the halfvec entry feeds it."""
     emb = t["embeddings"].select("vec_id", V.fp16_quantize("embedding").alias("embedding"))
     qs = t["queries"].select("query_id", V.fp16_quantize("query_vector").alias("query_vector"))
-    a = sorted(map(tuple, ann.l2_topk_bruteforce(emb, qs, k=10).collect()))
-    b = sorted(map(tuple, ann.l2_topk_bruteforce(emb, qs, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    got = _nan_rows(ann.l2_topk_bruteforce(emb, qs, k=10))
+    want = _nan_rows(_ref_vec_topk(emb, qs, V.l2_distance("embedding", "query_vector"), 10))
+    assert got == want and len(want) > 0
 
 
 def test_sparse_cosine_numpy_kernel_matches_expr(t):
-    """sparse_cosine_topk impl="numpy" (scatter-to-dense BLAS) ≡ the sparse
-    expression path, including high thresholds that empty some vectors
-    (zero-norm → NaN, which must sort last in both paths)."""
+    """sparse_cosine_topk (scatter-to-dense kernel) ≡ the sparse
+    expression reference, including high thresholds that empty some
+    vectors (zero-norm → NaN, which must sort last in both)."""
+    from vectorsearch_rbac_spark.functions import sparse as SV
+
     for thr in (0.15, 1.5):
-        a = sorted(map(tuple, ann.sparse_cosine_topk(
-            t["embeddings"], t["queries"], k=10, threshold=thr).collect()))
-        b = sorted(map(tuple, ann.sparse_cosine_topk(
-            t["embeddings"], t["queries"], k=10, threshold=thr, impl="numpy").collect()))
-        assert ([x[:2] for x in a] == [x[:2] for x in b]) and len(a) > 0
-        for ra, rb in zip(a, b):
-            assert ra[3] == rb[3]
-            assert (ra[2] == rb[2]) or (ra[2] != ra[2] and rb[2] != rb[2])  # NaN == NaN
+        e = t["embeddings"].select(
+            "vec_id", SV.sparse_from_dense("embedding", thr).alias("sv")
+        ).select("vec_id", F.col("sv.indices").alias("ie"), F.col("sv.values").alias("ve"))
+        qs = t["queries"].select(
+            "query_id", SV.sparse_from_dense("query_vector", thr).alias("sv")
+        ).select("query_id", F.col("sv.indices").alias("iq"), F.col("sv.values").alias("vq"))
+        want = _nan_rows(_ref_vec_topk(e, qs, SV.sparse_cosine_distance("ie", "ve", "iq", "vq"), 10))
+        got = _nan_rows(ann.sparse_cosine_topk(t["embeddings"], t["queries"], k=10, threshold=thr))
+        assert got == want and len(want) > 0, thr
 
 
 def test_int8_numpy_kernel_matches_expr(t):
-    """int8_topk impl="numpy" (int64 matmul) ≡ expr bit-for-bit."""
+    """int8_topk (int64 matmul kernel) ≡ the expression reference's
+    aggregate(zip_with) integer dot, ranked by (-dot, id), bit for bit."""
+    from pyspark.sql import Window
     from vectorsearch_rbac_spark.operators import curation
 
-    a = sorted(map(tuple, curation.int8_topk(t["embeddings"], t["queries"], k=10).collect()))
-    b = sorted(map(tuple, curation.int8_topk(t["embeddings"], t["queries"], k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    e = t["embeddings"].select("vec_id", curation.int8_quantize("embedding").alias("qe"))
+    q = t["queries"].select("query_id", curation.int8_quantize("query_vector").alias("qq"))
+    dot = F.aggregate(F.zip_with("qe", "qq", lambda a, b: a * b), F.lit(0).cast("long"),
+                      lambda acc, x: acc + x)
+    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
+    want = sorted(map(tuple, (
+        e.crossJoin(q).select("query_id", "vec_id", dot.alias("dot"))
+        .withColumn("rank", F.row_number().over(w).cast("long")).where(F.col("rank") <= 10)
+        .collect()
+    )))
+    got = sorted(map(tuple, curation.int8_topk(t["embeddings"], t["queries"], k=10).collect()))
+    assert got == want and len(want) > 0
+
+
+def test_cosine_searches_zero_norm_empty_and_oversized_k(spark):
+    """A zero-norm vector or query has a NaN cosine distance, which ranks
+    LAST (after anti-correlated candidates at distance 2), never at 1.0.
+    An empty query frame yields 0 rows with the non-empty schema, and
+    k > corpus returns every vector exactly once per query."""
+    import math
+
+    rows = [
+        (0, [1.0, 2.0, 0.5, -1.0]),
+        (1, [-1.0, -2.0, -0.5, 1.0]),   # anti-correlated with vector 0
+        (2, [0.0, 0.0, 0.0, 0.0]),      # zero norm
+        (3, [0.5, -1.0, 2.0, 0.25]),
+        (4, [-2.0, -1.5, 0.0, 0.5]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    qs = spark.createDataFrame(
+        [(10, rows[0][1]), (11, rows[2][1])], "query_id long, query_vector array<float>"
+    )
+    # one plane, one table, hamming-1 multiprobe: every vector is a
+    # candidate of every query, so LSH ranks the whole corpus
+    searches = {
+        "lsh": lambda q, k: ann.cosine_topk_lsh(
+            emb, q, k=k, n_planes=1, n_tables=1, multiprobe_hamming=1),
+        "bruteforce": lambda q, k: ann.cosine_topk_bruteforce(emb, q, k=k),
+        "sparse": lambda q, k: ann.sparse_cosine_topk(emb, q, k=k, threshold=0.0),
+    }
+    for name, search in searches.items():
+        full = search(qs, 10)
+        got = full.orderBy("query_id", "rank").collect()
+        by_q = {}
+        for r in got:
+            by_q.setdefault(r["query_id"], []).append(r)
+        for qid, rs in by_q.items():
+            assert sorted(r["vec_id"] for r in rs) == [0, 1, 2, 3, 4], (name, qid)
+            assert [r["rank"] for r in rs] == [1, 2, 3, 4, 5], (name, qid)
+        q0 = by_q[10]
+        assert q0[0]["vec_id"] == 0 and q0[-1]["vec_id"] == 2, (name, q0)
+        assert math.isnan(q0[-1]["distance"]), (name, q0)
+        assert [r["vec_id"] for r in q0[-2:]] == [1, 2], (name, q0)
+        assert all(math.isnan(r["distance"]) for r in by_q[11]), (name, by_q[11])
+        assert [r["vec_id"] for r in by_q[11]] == [0, 1, 2, 3, 4], name
+        empty = search(qs.limit(0), 10)
+        assert empty.count() == 0, name
+        assert empty.dtypes == full.dtypes, name
 
 
 def test_role_family_numpy_kernels_match_expr(t, spark):

@@ -153,41 +153,89 @@ def test_logn_cost_fit(fitted):
     assert logn["mae"] <= 2.0 * lin["mae"] + 1e-9
 
 
+def _ref_pair_scores(df, queries, id_col, vec_col, carry=()):
+    """Test-only expression reference for ``tuning._pair_scores``: every
+    (query, row) pair, ``F.round`` of the codegen'd L2 distance."""
+    from pyspark.sql import functions as F
+    from vectorsearch_rbac_spark.functions import vector as V
+
+    return df.crossJoin(queries.select("query_id", "query_vector")).select(
+        "query_id", id_col,
+        F.round(V.l2_distance(vec_col, "query_vector"), 6).alias("distance"), *carry,
+    )
+
+
+def _same_rows(a, b):
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+    assert a.count() == b.count() > 0
+
+
 def test_recall_cost_curve_numpy_matches_expr(fitted):
-    """The kernel-scored k-means curve must equal the expression-scored
-    one row-for-row (same probes, same rounded distances, same cuts)."""
-    cn = tuning.recall_cost_curve(
-        fitted["indexed"], fitted["queries"], fitted["C"], fitted["truth"],
-        k=10, nprobes=list(range(1, fitted["nlists"] + 1)), impl="numpy",
-    ).collect()
-    assert sorted(map(tuple, cn)) == sorted(map(tuple, fitted["curve"]))
-    import pytest as _pt
-    with _pt.raises(ValueError, match="metric='l2' only"):
-        tuning.recall_cost_curve(
-            fitted["indexed"], fitted["queries"], fitted["C"], fitted["truth"],
-            k=10, metric="cosine", impl="numpy",
-        )
+    """The pair-scoring kernel behind recall_cost_curve returns EXACTLY
+    the expression reference's rows in its carry_schema form (centroid_id
+    repeated per pair), so the k-means curve is the expression curve."""
+    got = tuning._pair_scores(
+        fitted["indexed"], fitted["queries"], id_col="block_id", vec_col="vector",
+        carry_schema="centroid_id int",
+    )
+    want = _ref_pair_scores(
+        fitted["indexed"], fitted["queries"], "block_id", "vector", carry=("centroid_id",)
+    )
+    assert got.columns == want.columns
+    _same_rows(got, want)
 
 
 def test_anchor_curve_numpy_kernel_matches_expr(t, spark, sf_dir):
     """The Arrow pair-scoring kernel (per-dim j-order accumulation,
-    half-up 6-dp round) must make anchor_ivf_truth and anchor_ivf_curve
-    return EXACTLY the expression path's rows — the pq/lsh kernel pin
-    applied to the tuning curve's dominant Q·N scan."""
-    from vectorsearch_rbac_spark.sources import load_table
+    half-up 6-dp round) returns EXACTLY the expression reference's rows
+    in its plain form, so anchor_ivf_truth is the expression truth."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     emb = load_table(spark, "embeddings", sf_dir)
     qs = derive.derive_queries(emb, 100)
-    te = tuning.anchor_ivf_truth(emb, qs, k=10, impl="expr")
-    tn = tuning.anchor_ivf_truth(emb, qs, k=10, impl="numpy")
-    assert te.exceptAll(tn).count() == 0
-    assert tn.exceptAll(te).count() == 0
-    assert te.count() == tn.count() > 0
-    ce = tuning.anchor_ivf_curve(emb, qs, nlists=8, anchor_stride=37, k=10).collect()
-    cn = tuning.anchor_ivf_curve(
-        emb, qs, nlists=8, anchor_stride=37, k=10, impl="numpy"
-    ).collect()
-    assert sorted(map(tuple, ce)) == sorted(map(tuple, cn)) and len(ce) == 8
+    want = _ref_pair_scores(emb, qs, "vec_id", "embedding")
+    _same_rows(tuning._pair_scores(emb, qs), want)
+    wq = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("vec_id").asc())
+    _same_rows(
+        tuning.anchor_ivf_truth(emb, qs, k=10),
+        want.withColumn("rank", F.row_number().over(wq)).where(F.col("rank") <= 10)
+        .select("query_id", "vec_id"),
+    )
+
+
+def _python_rdd_scans(df):
+    """Scans in the executed plan whose RDD is a Python-RDD literal (the
+    classic ``createDataFrame(list)`` form, re-pickled on every job); a
+    localCheckpoint scan is an RDD scan too, but not a Python one."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    leaves = plan.collectLeaves()
+    return [
+        leaves.apply(i).toString()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "RDDScanExec"
+        and "applySchemaToPythonRDD" in leaves.apply(i).rdd().toDebugString()
+    ]
+
+
+def test_tuning_literals_are_not_python_rdd_scans(fitted, spark, sf_dir):
+    """The probe tables and nprobe grids are Arrow-built literal relations:
+    the curve tune_ivf measures has no ExistingRDD scan at all, and the
+    anchor curve (tuning_curve) has none over a Python RDD — its only RDD
+    scan is the localCheckpoint of the anchor assignment."""
+    curve = tuning.recall_cost_curve(
+        fitted["indexed"], fitted["queries"], fitted["C"], fitted["truth"],
+        k=10, nprobes=list(range(1, fitted["nlists"] + 1)),
+    )
+    assert "ExistingRDD" not in curve._jdf.queryExecution().executedPlan().toString()
+    emb = load_table(spark, "embeddings", sf_dir)
+    qs = derive.derive_queries(emb, 100)
+    anchor = tuning.anchor_ivf_curve(emb, qs, nlists=8, anchor_stride=37, k=10)
+    assert _python_rdd_scans(anchor) == []
+    assert len(anchor.collect()) == 8
 
 
 def test_tune_ivf_end_to_end(fitted):

@@ -1,7 +1,8 @@
 """Emit PLAN_REPORT.md: one row per queries() entry with the physical-plan
 shape counters that matter at 100 TB — shuffle exchanges, broadcasts,
-sort-merge joins, and whether the scan carries pushed filters. The compact form of `.explain()` review across the whole
-surface: a regression shows up as a counter jump.
+sort-merge joins, Python-boundary nodes (Arrow/pandas kernels), and
+whether the scan carries pushed filters. The compact form of `.explain()`
+review across the whole surface: a regression shows up as a counter jump.
 
 Usage: python tools/plan_report.py [sf_dir]   (default /root/testdata/sf0.001)
 """
@@ -18,6 +19,19 @@ import __spark_entry__ as entry
 from vectorsearch_rbac_spark.sources import get_spark
 
 
+# exec nodes where rows cross into a Python worker
+PY_NODES = (
+    "MapInPandas", "MapInArrow", "ArrowEvalPython", "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas", "AggregateInPandas", "WindowInPandas",
+)
+
+
+def py_nodes(plan: str) -> int:
+    """Python-boundary exec nodes in a plan string (no name above is a
+    substring of another, so plain counts do not double-count)."""
+    return sum(plan.count(n) for n in PY_NODES)
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("plan-report")
@@ -26,19 +40,20 @@ def main() -> None:
         try:
             p = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # streaming-only or env-specific entries
-            rows.append((name, "-", "-", "-", "-", f"error: {type(exc).__name__}"))
+            rows.append((name, "-", "-", "-", "-", "-", f"error: {type(exc).__name__}"))
             continue
         rows.append((
             name,
             p.count("Exchange hashpartitioning"),
             p.count("BroadcastExchange"),
             p.count("SortMergeJoin"),
+            py_nodes(p),
             "y" if "PushedFilters: [" in p and not re.search(r"PushedFilters: \[\]", p) else "-",
             "",
         ))
     out = ["# Plan-shape report (executed plans at sf0.001)", "",
-           "| query | shuffles | broadcasts | SMJ | pushed filters | note |",
-           "| --- | --- | --- | --- | --- | --- |"]
+           "| query | shuffles | broadcasts | SMJ | py nodes | pushed filters | note |",
+           "| --- | --- | --- | --- | --- | --- | --- |"]
     for r in rows:
         out.append("| " + " | ".join(str(x) for x in r) + " |")
     text = "\n".join(out) + "\n"

@@ -17,31 +17,33 @@ from ..functions import vector as V
 from .knn import topk_per_query
 
 
-def cosine_topk_bruteforce(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    impl: str = "expr",
-) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × scan, codegen'd distance,
-    window top-k. The oracle-checkable baseline for every ANN variant.
-    ``impl='numpy'`` scores the pairs through an Arrow kernel replicating
-    the expression's exact op sequence (j-order dot/norm folds, NaN on
-    zero norms, half-up 6-dp round, −0.0 fold) — pytest-pinned
-    row-identical; the sf0.01 oracle gate replays either (same rows)."""
-    if impl == "numpy":
-        scored = _cosine_pairs_numpy(embeddings, queries, id_col, vec_col, k=k)
-    else:
-        scored = (
-            embeddings.join(F.broadcast(queries.select("query_id", "query_vector")), how="cross")
-            # + 0.0 folds IEEE -0.0 (from rounding 1 - sim when sim ≈ 1+ε) to +0.0
-            .withColumn("distance", F.round(V.cosine_distance(vec_col, "query_vector"), 6) + F.lit(0.0))
-            .select("query_id", F.col(id_col).alias("block_id"), "distance")
-        )
-    w = topk_per_query(scored, k, id_col="block_id")
-    return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
+def _round6(D: "np.ndarray") -> "np.ndarray":
+    """``F.round(·, 6)`` on distances: half-up at 6 dp, then + 0.0 folds
+    IEEE −0.0 (from 1 − sim when sim ≈ 1+ε) to +0.0."""
+    return np.floor(D * 1e6 + 0.5) / 1e6 + 0.0
+
+
+def _fold_norms(X: "np.ndarray") -> "np.ndarray":
+    """Row norms in ``V.vector_norm``'s op order: Σ_j x_j² folded left to
+    right from 0.0 ((0.0 + t0) ≡ t0 in IEEE), then sqrt."""
+    s = np.zeros(len(X))
+    for j in range(X.shape[1]):
+        s = s + X[:, j] * X[:, j]
+    return np.sqrt(s)
+
+
+def _cosine_dist(dot: "np.ndarray", den: "np.ndarray") -> "np.ndarray":
+    """Rounded 1 − dot/den with ``V.cosine_similarity``'s NaN on a zero
+    denominator (try_divide + coalesce), so zero-norm rows sort LAST."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sim = np.where(den == 0.0, np.nan, dot / den)
+    return _round6(1.0 - sim)
+
+
+def _nan_distance(df: DataFrame) -> DataFrame:
+    """pandas→Arrow masks NaN as null; restore the explicit NaN (a null
+    distance would sort FIRST ascending, NaN sorts last)."""
+    return df.withColumn("distance", F.coalesce("distance", F.lit(float("nan"))))
 
 
 def _batch_topk_rows(D: "np.ndarray", ids: "np.ndarray", k: int) -> "np.ndarray":
@@ -76,80 +78,81 @@ def _batch_topk_rows(D: "np.ndarray", ids: "np.ndarray", k: int) -> "np.ndarray"
     return np.concatenate(sel), kk
 
 
-def _cosine_pairs_numpy(
-    embeddings: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
-    k: int | None = None,
-) -> DataFrame:
-    """(query_id, block_id, distance) pairs via mapInPandas — bit-identical
-    to the expression path: dot and squared-norm folds accumulate per-dim
-    in the codegen fold's j-order ((0.0 + t0) ≡ t0), zero denominators map
-    to NaN (try_divide + coalesce parity), then 1 − sim, the half-up 6-dp
-    round, and + 0.0 to fold −0.0. Queries broadcast as one (Q, d) matrix,
-    so each corpus vector crosses the Arrow boundary once, not once per
-    query. ``k`` enables the two-phase pre-cut: each Arrow batch emits only
-    its per-query top-k (same rounded-distance + id order the global
-    window applies), so stage-2 ranks P·Q·k rows instead of N·Q — the
-    100 TB shape. ``k=None`` emits every pair (truth builds)."""
+def _scan_topk(scan: DataFrame, queries: DataFrame, prep, score, k: int, id_col: str) -> DataFrame:
+    """Two-phase exact top-k over an Arrow kernel. ``queries`` is collected
+    once (Q-bounded, the local_topk pattern) and ``prep(rows)`` turns it
+    into the broadcast query payload; per Arrow batch of ``scan``,
+    ``score(pdf, payload)`` returns the (rows, Q) distance matrix and only
+    each query's batch top-k leaves the partition, so the window ranks
+    P·Q·k rows instead of N·Q. Each corpus vector crosses the Arrow
+    boundary once, not once per query."""
     import pandas as pd
 
-    spark = embeddings.sparkSession
-    q_rows = queries.select("query_id", "query_vector").collect()
+    spark = scan.sparkSession
+    q_rows = queries.collect()
     if not q_rows:
-        return spark.createDataFrame([], "query_id long, block_id long, distance double")
+        return spark.createDataFrame(
+            [], f"query_id long, {id_col} long, distance double, rank int"
+        )
     qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
-    QM = np.stack([np.asarray(r["query_vector"], dtype=np.float64) for r in q_rows])
-    bc = spark.sparkContext.broadcast((qids, QM))
+    bc = spark.sparkContext.broadcast((qids, prep(q_rows)))
 
     def part(batches):
-        qids_, QM_ = bc.value
+        qids_, payload = bc.value
         nq = len(qids_)
-        d = QM_.shape[1]
-        # per-query norms: the same sequential fold the expr runs per row
-        qn = np.zeros(nq)
-        for j in range(d):
-            qn = qn + QM_[:, j] * QM_[:, j]
-        qn = np.sqrt(qn)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             ids = pdf[id_col].to_numpy()
-            dot = np.zeros((len(ids), nq))
-            xn = np.zeros(len(ids))
-            for j in range(d):
-                dot = dot + X[:, j][:, None] * QM_[:, j][None, :]
-                xn = xn + X[:, j] * X[:, j]
-            xn = np.sqrt(xn)
-            den = xn[:, None] * qn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = np.where(den == 0.0, np.nan, dot / den)
-            dist = 1.0 - sim
-            dist = np.floor(dist * 1e6 + 0.5) / 1e6 + 0.0
-            if k is not None:
-                sel, kk = _batch_topk_rows(dist, ids, k)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_, kk),
-                        "block_id": ids[sel],
-                        "distance": dist[sel, np.repeat(np.arange(nq), kk)],
-                    }
-                )
-                continue
+            D = score(pdf, payload)
+            sel, kk = _batch_topk_rows(D, ids, k)
             yield pd.DataFrame(
                 {
-                    "query_id": np.tile(qids_, len(ids)),
-                    "block_id": np.repeat(ids, nq),
-                    "distance": dist.ravel(),
+                    "query_id": np.repeat(qids_, kk),
+                    "block_id": ids[sel],
+                    "distance": D[sel, np.repeat(np.arange(nq), kk)],
                 }
             )
 
-    out = embeddings.select(id_col, vec_col).mapInPandas(
-        part, schema="query_id long, block_id long, distance double"
+    scored = _nan_distance(
+        scan.mapInPandas(part, schema="query_id long, block_id long, distance double")
     )
-    # pandas→Arrow masks NaN as null; restore the expr path's explicit NaN
-    # (zero-norm rows must sort LAST ascending, a null would sort first)
-    return out.withColumn(
-        "distance", F.coalesce("distance", F.lit(float("nan")))
+    w = topk_per_query(scored, k, id_col="block_id")
+    return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
+
+
+def _query_matrix(q_rows, col: str) -> "np.ndarray":
+    return np.stack([np.asarray(r[col], dtype=np.float64) for r in q_rows])
+
+
+def cosine_topk_bruteforce(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact cosine top-k — the oracle-checkable baseline for every ANN
+    variant. An Arrow kernel scores each batch against the broadcast
+    (Q, d) query matrix with ``V.cosine_distance``'s op sequence (j-order
+    dot and norm folds, NaN on a zero norm, half-up 6-dp round, −0.0
+    fold), so the rows are the ones the DuckDB oracle replays."""
+
+    def prep(q_rows):
+        QM = _query_matrix(q_rows, "query_vector")
+        return QM, _fold_norms(QM)
+
+    def score(pdf, payload):
+        QM, qn = payload
+        X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        dot = np.zeros((len(X), len(QM)))
+        for j in range(QM.shape[1]):
+            dot = dot + X[:, j][:, None] * QM[:, j][None, :]
+        return _cosine_dist(dot, _fold_norms(X)[:, None] * qn[None, :])
+
+    return _scan_topk(
+        embeddings.select(id_col, vec_col), queries.select("query_id", "query_vector"),
+        prep, score, k, id_col,
     )
 
 
@@ -160,73 +163,24 @@ def l2_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_vec_col: str = "query_vector",
-    impl: str = "expr",
 ) -> DataFrame:
     """Exact L2 top-k over a single-id vector table (the halfvec / fp-tier
-    scan shape): broadcast queries × scan, 6-dp-rounded distance, window
-    top-k with id tie-breaks. ``impl='numpy'`` rides a two-phase Arrow
-    kernel (per-batch pre-cut, then the same global window) that is
-    BIT-identical to the expression fold: the squared-distance accumulates
-    per-dim in the codegen fold's j-order ((x_j−q_j)² added left-to-right,
-    (0.0 + t0) ≡ t0), then sqrt and the half-up 6-dp round mirroring
-    ``F.round``; pytest pins numpy ≡ expr row-for-row."""
-    qsel = queries.select("query_id", query_vec_col)
-    if impl == "numpy":
-        import pandas as pd
+    scan shape) with id tie-breaks. The Arrow kernel folds the squared
+    distance per dim in ``V.l2_distance``'s j-order ((x_j−q_j)² added left
+    to right, (0.0 + t0) ≡ t0), then sqrt and the half-up 6-dp round."""
 
-        spark = embeddings.sparkSession
-        q_rows = qsel.collect()
-        if not q_rows:
-            return spark.createDataFrame(
-                [], f"query_id long, {id_col} long, distance double, rank int"
-            )
-        qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
-        QM = np.stack([np.asarray(r[query_vec_col], dtype=np.float64) for r in q_rows])
-        bc = spark.sparkContext.broadcast((qids, QM))
+    def score(pdf, QM):
+        X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        d2 = np.zeros((len(X), len(QM)))
+        for j in range(QM.shape[1]):
+            t = X[:, j][:, None] - QM[:, j][None, :]
+            d2 = d2 + t * t
+        return _round6(np.sqrt(d2))
 
-        def part(batches):
-            qids_, QM_ = bc.value
-            nq = len(qids_)
-            d = QM_.shape[1]
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                ids = pdf[id_col].to_numpy()
-                # per-dim j-order fold ≡ the expr's sequential (x−q)² sum
-                d2 = np.zeros((len(ids), nq))
-                for j in range(d):
-                    t = X[:, j][:, None] - QM_[:, j][None, :]
-                    d2 = d2 + t * t
-                D = np.sqrt(d2)
-                D = np.floor(D * 1e6 + 0.5) / 1e6 + 0.0
-                sel, kk = _batch_topk_rows(D, ids, k)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_, kk),
-                        "block_id": ids[sel],
-                        "distance": D[sel, np.repeat(np.arange(nq), kk)],
-                    }
-                )
-
-        scored = embeddings.select(id_col, vec_col).mapInPandas(
-            part, schema="query_id long, block_id long, distance double"
-        ).withColumn(
-            # pandas→Arrow masks NaN as null (a NaN input component would
-            # surface as a null distance and sort FIRST); restore NaN
-            "distance", F.coalesce("distance", F.lit(float("nan")))
-        )
-    else:
-        scored = (
-            embeddings.join(F.broadcast(qsel), how="cross")
-            .withColumn(
-                "distance",
-                F.round(V.l2_distance(vec_col, query_vec_col), 6) + F.lit(0.0),
-            )
-            .select("query_id", F.col(id_col).alias("block_id"), "distance")
-        )
-    w = topk_per_query(scored, k, id_col="block_id")
-    return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
+    return _scan_topk(
+        embeddings.select(id_col, vec_col), queries.select("query_id", query_vec_col),
+        lambda q_rows: _query_matrix(q_rows, query_vec_col), score, k, id_col,
+    )
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -254,6 +208,18 @@ def lsh_bucket(df: DataFrame, planes: np.ndarray, vec_col: str = "embedding", ou
     return df.withColumn(out_col, _bucket_expr(planes, vec_col))
 
 
+def _lsh_buckets(X: "np.ndarray", P: "np.ndarray", n_tables: int, n_planes: int) -> "np.ndarray":
+    """(rows, n_tables) packed sign-bit buckets, ``_bucket_expr``'s bits:
+    each x·h folds left to right from 0.0 as ``V.inner_product`` does, so
+    every sign bit — the only unrounded float comparison — matches the
+    expression and the DuckDB oracle's list_inner_product bit-for-bit."""
+    S = np.zeros((len(X), len(P)))
+    for j in range(P.shape[1]):
+        S = S + X[:, j][:, None] * P[:, j][None, :]
+    bits = (S > 0).astype(np.int64).reshape(len(X), n_tables, n_planes)
+    return (bits * (1 << np.arange(n_planes, dtype=np.int64))).sum(axis=2)
+
+
 def cosine_topk_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -264,174 +230,77 @@ def cosine_topk_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     multiprobe_hamming: int = 1,
-    impl: str = "expr",
 ) -> DataFrame:
     """Approximate cosine top-k with ``n_tables`` independent hash tables:
     a candidate is scored if, in ANY table, its bucket is within
-    ``multiprobe_hamming`` bit-flips of the query's bucket.
+    ``multiprobe_hamming`` bit-flips (radius ≤ 1) of the query's bucket.
 
     Scale path for E6: per table the candidate set is ~N·(1+b)/2^b; tables
-    multiply recall (1-(1-r)^L) for additive cost. Everything is one plan:
-    tables are an exploded literal dimension, so the bucket equi-join covers
-    all tables in a single shuffle. Recall is tested against the
-    brute-force baseline (tests/test_knn.py), mirroring the reference's
+    multiply recall (1-(1-r)^L) for additive cost. Recall is tested against
+    the brute-force baseline (tests/test_knn.py), mirroring the reference's
     recall-vs-ground-truth validation (basic_benchmark/compute_ground_truth.py).
 
-    ``impl`` picks the execution kernel for the SAME bucketing scheme:
-    "expr" evaluates signatures and candidate distances as Catalyst
-    higher-order functions — every float op is a left-to-right sequential
-    sum an ANSI-SQL oracle replays bit-for-bit, which is what the
-    exact-certified member (global_topk 'lsh_exact') needs. HOFs are
-    interpreted row-at-a-time, though, so "numpy" is the throughput path:
-    one Arrow-batched BLAS matmul signs all tables per partition, hash
-    maps give candidate lists, and only deduped candidates are scored —
-    with ≤ Q×k rows leaving each partition (the local_topk shape). Sign
-    ties at exactly 0.0 may differ from the sequential sum in the last
-    ulp, so the certified member stays on "expr".
+    One Arrow pass per scan partition, with the queries on an executor
+    broadcast of a Q-bounded collect: one fold signs every table
+    (:func:`_lsh_buckets`), the (query, row) candidate pairs are the rows
+    whose bucket differs from the query's by at most one bit in some
+    table, and only those pairs are scored, with the brute force's cosine
+    op sequence (j-order dot and norms, NaN on a zero norm so zero vectors
+    rank last, half-up 6-dp round). Each partition emits ≤ Q×k rows into
+    the exact window merge. Bucketing and scoring are both exact, so the
+    DuckDB oracle replays the search row for row (global_topk 'lsh_exact').
     """
-    if impl == "numpy":
-        return _cosine_topk_lsh_numpy(
-            embeddings, queries, k, n_planes, n_tables, seed, id_col, vec_col,
-            multiprobe_hamming,
-        )
-    dim = len(embeddings.select(vec_col).first()[0])
-    # ALL tables' signatures in ONE corpus scan: an L-table union would
-    # re-read and re-sign the corpus L times; here the per-table buckets
-    # are one struct array exploded after a single pass
-    table_planes = [hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
-    e_sigs = F.array(*[
-        F.struct(F.lit(t).alias("table"), _bucket_expr(p, vec_col).alias("bucket"))
-        for t, p in enumerate(table_planes)
-    ])
-    e = embeddings.select(
-        F.col(id_col).alias("block_id"), F.col(vec_col).alias("_v"),
-        F.explode(e_sigs).alias("_tb"),
-    ).select("block_id", "_v", F.col("_tb.table").alias("table"), F.col("_tb.bucket").alias("bucket"))
-    q_sigs = F.array(*[
-        F.struct(F.lit(t).alias("table"), _bucket_expr(p, "query_vector").alias("qbucket"))
-        for t, p in enumerate(table_planes)
-    ])
-    q = queries.select(
-        "query_id", "query_vector", F.explode(q_sigs).alias("_tb")
-    ).select("query_id", "query_vector", F.col("_tb.table").alias("table"), F.col("_tb.qbucket").alias("qbucket"))
-
-    # multiprobe: query bucket + all buckets within hamming radius
-    probe_buckets = [F.col("qbucket")]
-    if multiprobe_hamming >= 1:
-        probe_buckets += [F.col("qbucket").bitwiseXOR(F.lit(2 ** i)) for i in range(n_planes)]
-    q_probes = q.select(
-        "table", "query_id", "query_vector", F.explode(F.array(*probe_buckets)).alias("bucket")
-    )
-    scored = (
-        e.join(q_probes, ["table", "bucket"])
-        .withColumn("distance", F.round(V.cosine_distance("_v", "query_vector"), 6))
-        .select("query_id", "block_id", "distance")
-        .groupBy("query_id", "block_id")
-        .agg(F.min("distance").alias("distance"))
-    )
-    w = topk_per_query(scored, k, id_col="block_id")
-    return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
-
-
-def _cosine_topk_lsh_numpy(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_planes: int,
-    n_tables: int,
-    seed: int,
-    id_col: str,
-    vec_col: str,
-    multiprobe_hamming: int,
-) -> DataFrame:
-    """Arrow/BLAS kernel behind ``cosine_topk_lsh(impl="numpy")``.
-
-    Per scan partition: one X @ P.T matmul signs every table's signature
-    at once, per-table dicts bucket→rows give candidate lists for the
-    query probes (query bucket + hamming-1 flips), and BLAS scores ONLY
-    the deduped candidates; each partition emits ≤ Q×k rows into the
-    stage-2 exact window merge. Queries ride an executor broadcast of a
-    Q-bounded collect (the local_topk pattern), never a shuffle.
-    """
-    from typing import Iterator
-
     import pandas as pd
 
+    spark = embeddings.sparkSession
     q_rows = queries.select("query_id", "query_vector").collect()
     if not q_rows:
-        return embeddings.sparkSession.createDataFrame(
+        return spark.createDataFrame(
             [], f"query_id long, {id_col} long, distance double, rank int"
         )
-    dim = len(q_rows[0]["query_vector"])
+    qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
+    Q = _query_matrix(q_rows, "query_vector")
     P = np.concatenate(
-        [hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
+        [hyperplanes(Q.shape[1], n_planes, seed + 1000 * t) for t in range(n_tables)]
     )  # (n_tables·n_planes) × dim
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([np.asarray(r["query_vector"], dtype=np.float64) for r in q_rows])
-    pow2 = 1 << np.arange(n_planes, dtype=np.int64)
-    qbits = ((Q @ P.T) > 0).astype(np.int64).reshape(len(qids), n_tables, n_planes)
-    qbuckets = (qbits * pow2).sum(axis=2)  # Q × n_tables
-    # probe sets: the query bucket plus every hamming-1 flip (radius ≤ 1,
-    # matching the expression path's multiprobe)
-    flips = pow2 if multiprobe_hamming >= 1 else np.array([], dtype=np.int64)
-    qn = np.linalg.norm(Q, axis=1)
-    bc = embeddings.sparkSession.sparkContext.broadcast((qids, Q, qn, qbuckets, flips))
+    bc = spark.sparkContext.broadcast(
+        (qids, Q, _fold_norms(Q), _lsh_buckets(Q, P, n_tables, n_planes), P)
+    )
 
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Q_, qn_, qbuckets_, flips_ = bc.value
+    def part(batches):
+        qids_, Q_, qn, qb, P_ = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             ids = pdf[id_col].to_numpy()
-            xn = np.linalg.norm(X, axis=1)
-            bits = ((X @ P.T) > 0).astype(np.int64).reshape(len(ids), n_tables, n_planes)
-            buckets = (bits * pow2).sum(axis=2)  # n × n_tables
-            tables = []
+            xb = _lsh_buckets(X, P_, n_tables, n_planes)
+            hit = np.zeros((len(X), len(qids_)), dtype=bool)
             for t in range(n_tables):
-                d: dict = {}
-                col = buckets[:, t]
-                order = np.argsort(col, kind="stable")
-                sb = col[order]
-                starts = np.flatnonzero(np.r_[True, sb[1:] != sb[:-1]])
-                for s, e in zip(starts, np.r_[starts[1:], len(sb)]):
-                    d[sb[s]] = order[s:e]
-                tables.append(d)
-            out_q, out_i, out_d = [], [], []
-            for qi in range(len(qids_)):
-                cand = []
-                for t in range(n_tables):
-                    b = qbuckets_[qi, t]
-                    hit = tables[t].get(b)
-                    if hit is not None:
-                        cand.append(hit)
-                    for f in flips_:
-                        hit = tables[t].get(b ^ f)
-                        if hit is not None:
-                            cand.append(hit)
-                if not cand:
-                    continue
-                idx = np.unique(np.concatenate(cand))
-                D = np.round(
-                    1.0 - (X[idx] @ Q_[qi]) / np.maximum(xn[idx] * qn_[qi], 1e-30), 6
-                )
-                sel = np.lexsort((ids[idx], D))[: min(k, len(idx))]
-                out_q.append(np.full(len(sel), qids_[qi], dtype=np.int64))
-                out_i.append(ids[idx][sel])
-                out_d.append(D[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "block_id": np.concatenate(out_i),
-                        "distance": np.concatenate(out_d),
-                    }
-                )
+                h = xb[:, t][:, None] ^ qb[None, :, t]
+                # probe = the query bucket, plus every 1-bit flip of it
+                hit |= (h & (h - 1)) == 0 if multiprobe_hamming >= 1 else h == 0
+            ri, qi = np.nonzero(hit)
+            if not len(ri):
+                continue
+            dot = np.zeros(len(ri))
+            for j in range(Q_.shape[1]):
+                dot = dot + X[ri, j] * Q_[qi, j]
+            D = _cosine_dist(dot, _fold_norms(X)[ri] * qn[qi])
+            # per query: (distance, id) order, NaN last, first k survive
+            order = np.lexsort((ids[ri], D, qi))
+            qs = qi[order]
+            keep = order[np.arange(len(order)) - np.searchsorted(qs, qs) < k]
+            yield pd.DataFrame(
+                {"query_id": qids_[qi[keep]], "block_id": ids[ri[keep]], "distance": D[keep]}
+            )
 
-    partial = embeddings.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
-        part, schema="query_id long, block_id long, distance double"
+    scored = _nan_distance(
+        embeddings.select(id_col, vec_col).mapInPandas(
+            part, schema="query_id long, block_id long, distance double"
+        )
     )
-    w = topk_per_query(partial, k, id_col="block_id")
+    w = topk_per_query(scored, k, id_col="block_id")
     return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
 
 
@@ -588,19 +457,17 @@ def sparse_cosine_topk(
     threshold: float = 0.15,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
     """Exact cosine top-k over magnitude-sparsified vectors (sparsevec
     search parity): both sides keep dims with |v| > threshold; distance is
-    computed on the sparse representation only. ``impl='numpy'`` scatters
-    each Arrow batch's (indices, values) pairs into a dense slab and folds
-    dot and norms per-dim in ascending index order — BIT-identical to the
-    expression folds: the expr iterates a's stored pairs ascending probing
-    b (absent → 0.0 term) and sparse_norm folds stored values ascending;
-    the dense j-loop adds the same nonzero terms in the same order with
-    exact-identity 0.0 terms between them. Zero denominators map to NaN
-    (try_divide + coalesce parity, NaN sorts last), half-up 6-dp round;
-    pytest pins numpy ≡ expr."""
+    computed on the sparse representation only. The Arrow kernel scatters
+    each batch's (indices, values) pairs into a dense slab and folds dot
+    and norms per dim in ascending index order — the op sequence of
+    ``sparse_cosine_distance``: it iterates a's stored pairs ascending
+    probing b (absent → 0.0 term) and ``sparse_norm`` folds stored values
+    ascending; the dense j-loop adds the same nonzero terms in the same
+    order with exact-identity 0.0 terms between them. Zero denominators
+    map to NaN (NaN sorts last), half-up 6-dp round."""
     from ..functions import sparse as SV
 
     e = embeddings.select(
@@ -609,87 +476,32 @@ def sparse_cosine_topk(
     qs = queries.select(
         "query_id", SV.sparse_from_dense("query_vector", threshold).alias("sv")
     ).select("query_id", F.col("sv.indices").alias("iq"), F.col("sv.values").alias("vq"))
-    if impl == "numpy":
-        import pandas as pd
 
-        spark = embeddings.sparkSession
-        q_rows = qs.collect()
-        if not q_rows:
-            return spark.createDataFrame(
-                [], f"query_id long, {id_col} long, distance double, rank int"
-            )
-        qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
-        q_dim = max((max(r["iq"]) if r["iq"] else 0) for r in q_rows)
-        bc = spark.sparkContext.broadcast(
-            (qids, [(np.asarray(r["iq"], dtype=np.int64),
-                     np.asarray(r["vq"], dtype=np.float64)) for r in q_rows], q_dim)
-        )
+    def scatter(idx, vals, d):
+        """(rows, d) dense slab of 1-indexed sparse pairs."""
+        M = np.zeros((len(idx), d))
+        for i, (iv, vv) in enumerate(zip(idx, vals)):
+            if len(iv):
+                M[i, np.asarray(iv, dtype=np.int64) - 1] = vv
+        return M
 
-        def part(batches):
-            qids_, qsparse, qd = bc.value
-            nq = len(qids_)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf[id_col].to_numpy()
-                n = len(ids)
-                # scatter width: covers every stored index on either side
-                # (1-indexed); dims absent from BOTH sides are zero in dot
-                # and in the stored-value norms, so padding is free
-                bd = 0
-                ie_list = [np.asarray(v, dtype=np.int64) for v in pdf["ie"]]
-                ve_list = [np.asarray(v, dtype=np.float64) for v in pdf["ve"]]
-                for iv in ie_list:
-                    if len(iv):
-                        bd = max(bd, int(iv.max()))
-                d = max(bd, qd, 1)
-                X = np.zeros((n, d))
-                for i, (iv, vv) in enumerate(zip(ie_list, ve_list)):
-                    if len(iv):
-                        X[i, iv - 1] = vv
-                QM = np.zeros((nq, d))
-                for i, (iv, vv) in enumerate(qsparse):
-                    if len(iv):
-                        QM[i, iv - 1] = vv
-                # per-dim j-order folds ≡ the expr's sequential sums (the
-                # scattered zeros are exact additive identities)
-                dot = np.zeros((n, nq))
-                xn2 = np.zeros(n)
-                qn2 = np.zeros(nq)
-                for j in range(d):
-                    dot = dot + X[:, j][:, None] * QM[:, j][None, :]
-                    xn2 = xn2 + X[:, j] * X[:, j]
-                    qn2 = qn2 + QM[:, j] * QM[:, j]
-                den = np.sqrt(xn2)[:, None] * np.sqrt(qn2)[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = np.where(den == 0.0, np.nan, dot / den)
-                D = 1.0 - sim
-                D = np.floor(D * 1e6 + 0.5) / 1e6 + 0.0
-                sel, kk = _batch_topk_rows(D, ids, k)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_, kk),
-                        "block_id": ids[sel],
-                        "distance": D[sel, np.repeat(np.arange(nq), kk)],
-                    }
-                )
+    def prep(q_rows):
+        return [r["iq"] for r in q_rows], [r["vq"] for r in q_rows]
 
-        scored = e.mapInPandas(
-            part, schema="query_id long, block_id long, distance double"
-        ).withColumn(
-            # pandas→Arrow masks NaN as null; restore the expr path's
-            # explicit NaN (empty sparse vectors must sort LAST ascending)
-            "distance", F.coalesce("distance", F.lit(float("nan")))
-        )
-    else:
-        scored = e.join(F.broadcast(qs), how="cross").select(
-            "query_id",
-            F.col(id_col).alias("block_id"),
-            # + 0.0 folds IEEE -0.0 to +0.0 (self-distance rounds to zero)
-            (F.round(SV.sparse_cosine_distance("ie", "ve", "iq", "vq"), 6) + F.lit(0.0)).alias("distance"),
-        )
-    w = topk_per_query(scored, k, id_col="block_id")
-    return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
+    def score(pdf, payload):
+        iq, vq = payload
+        # scatter width: covers every stored index on either side; dims
+        # absent from BOTH sides are zero in dot and in the stored-value
+        # norms, so padding is free
+        d = max([1] + [max(iv) for iv in list(pdf["ie"]) + iq if len(iv)])
+        X = scatter(pdf["ie"], pdf["ve"], d)
+        QM = scatter(iq, vq, d)
+        dot = np.zeros((len(X), len(QM)))
+        for j in range(d):
+            dot = dot + X[:, j][:, None] * QM[:, j][None, :]
+        return _cosine_dist(dot, _fold_norms(X)[:, None] * _fold_norms(QM)[None, :])
+
+    return _scan_topk(e, qs, prep, score, k, id_col)
 
 
 def semdedup_pairs(

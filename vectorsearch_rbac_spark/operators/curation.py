@@ -2,8 +2,9 @@
 (SURVEY.md §2 E16-E19): stratified sampling, sequence packing, TF-IDF
 term extraction, and int8-quantized similarity search.
 
-All four are pure DataFrame plans (codegen'd, no Python UDFs) with exact
-DuckDB-oracle formulations. Determinism follows the SURVEY.md §4 contract:
+The first three are pure DataFrame plans (codegen'd, no Python UDFs);
+int8 search scores in an Arrow kernel. All have exact DuckDB-oracle
+formulations. Determinism follows the SURVEY.md §4 contract:
 hashes via ``md5_long``, floats rounded to 6 dp, ties broken by id/term.
 """
 
@@ -335,7 +336,6 @@ def int8_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
     """Quantized brute-force top-k: both sides int8-quantized, similarity =
     integer dot product, top-k by (-dot, id). The quantized-search scale
@@ -343,63 +343,51 @@ def int8_topk(
     sensitivity), so this operator has a bit-exact oracle, and at 100 TB the
     scan reads 4× fewer bytes than float32 with SIMD-friendly math.
 
-    ``impl='numpy'`` rides a two-phase Arrow kernel: quantization stays in
-    the expression plan (the exact oracle's form), each batch does ONE
-    int64 matmul (bit-exact — |dot| ≤ 127²·d, no float path at all) and
-    emits its per-query top-k under the same (-dot, id) order, then the
-    global window re-ranks P·Q·k survivors. pytest pins numpy ≡ expr.
+    Two phases: quantization stays in the expression plan (the exact
+    oracle's form); each Arrow batch does ONE int64 matmul (bit-exact —
+    |dot| ≤ 127²·d, no float path at all) against the broadcast query
+    codes and emits its per-query top-k under the same (-dot, id) order,
+    so only ids and the scalar dot reach the rank exchange, where the
+    global window re-ranks P·Q·k survivors.
     """
+    import numpy as np
+    import pandas as pd
+
     e = embeddings.select(id_col, int8_quantize(vec_col).alias("qe"))
     q = queries.select("query_id", int8_quantize("query_vector").alias("qq"))
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
+    spark = embeddings.sparkSession
+    q_rows = q.collect()
+    if not q_rows:
+        return spark.createDataFrame(
+            [], f"query_id long, {id_col} long, dot long, rank long"
+        )
+    qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
+    QM = np.stack([np.asarray(r["qq"], dtype=np.int64) for r in q_rows])
+    bc = spark.sparkContext.broadcast((qids, QM))
 
-        spark = embeddings.sparkSession
-        q_rows = q.collect()
-        if not q_rows:
-            return spark.createDataFrame(
-                [], f"query_id long, {id_col} long, dot long, rank long"
+    def part(batches):
+        from .ann import _batch_topk_rows
+
+        qids_, QM_ = bc.value
+        nq = len(qids_)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(pdf["qe"].to_numpy()).astype(np.int64)
+            ids = pdf[id_col].to_numpy()
+            dot = X @ QM_.T
+            # shared cut on the NEGATED integer dots — same (-dot, id)
+            # order the window applies; integer matmul is bit-exact
+            sel, kk = _batch_topk_rows(-dot, ids, k)
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(qids_, kk),
+                    "block_id": ids[sel],
+                    "dot": dot[sel, np.repeat(np.arange(nq), kk)],
+                }
             )
-        qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
-        QM = np.stack([np.asarray(r["qq"], dtype=np.int64) for r in q_rows])
-        bc = spark.sparkContext.broadcast((qids, QM))
 
-        def part(batches):
-            from .ann import _batch_topk_rows
-
-            qids_, QM_ = bc.value
-            nq = len(qids_)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["qe"].to_numpy()).astype(np.int64)
-                ids = pdf[id_col].to_numpy()
-                dot = X @ QM_.T
-                # shared cut on the NEGATED integer dots — same (-dot, id)
-                # order the window applies; integer matmul is bit-exact
-                sel, kk = _batch_topk_rows(-dot, ids, k)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_, kk),
-                        "block_id": ids[sel],
-                        "dot": dot[sel, np.repeat(np.arange(nq), kk)],
-                    }
-                )
-
-        scored = e.mapInPandas(
-            part, schema="query_id long, block_id long, dot long"
-        )
-    else:
-        scored = e.join(F.broadcast(q), how="cross").select(
-            "query_id",
-            F.col(id_col).alias("block_id"),
-            F.aggregate(
-                F.zip_with("qe", "qq", lambda a, b: a * b),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dot"),
-        )
+    scored = e.mapInPandas(part, schema="query_id long, block_id long, dot long")
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("block_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))

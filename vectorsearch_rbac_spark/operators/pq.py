@@ -14,11 +14,10 @@ Spark mapping:
   as ``ivf.kmeans_fit`` — pgvector ivfbuild.c-style sampling);
 - encoding: one ``mapInPandas`` pass (argmin over ksub sub-centroids is a
   vectorized numpy reduction — the documented Pandas-UDF escape hatch);
-- search: pure built-in expressions — the per-query LUT rides the plan as
-  a literal-free computed column on the broadcast query side, and ADC is
-  ``aggregate(zip_with(codes, luts, (c, l) -> l[c]))`` inside codegen, so
-  the big side streams through whole-stage codegen reading only the code
-  arrays.
+- search: one Arrow pass over the codes — the per-query ADC tables build
+  once on the driver (dim-sized query side) and broadcast, each batch
+  gathers its codes' table entries for every query at once, and only the
+  per-batch top-k reaches the rank merge; no float vector is read.
 """
 
 from __future__ import annotations
@@ -124,11 +123,7 @@ def pq_encode(
 
 
 def _subspace_luts(Q: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
-    """(|Q|, m, ksub) ADC tables, lut[q][j][c] = ||Q[q]_subj − B[j][c]||².
-    THE one implementation of the LUT op sequence — the expression-fed
-    builder (:func:`_query_luts`) and the Arrow kernel
-    (:func:`_pq_scores_numpy`) both call it, so their row-for-row
-    equality never depends on two copies staying bit-identical."""
+    """(|Q|, m, ksub) ADC tables, lut[q][j][c] = ||Q[q]_subj − B[j][c]||²."""
     m, ksub, dsub = codebooks.shape
     lut = np.empty((len(Q), m, ksub))
     for j in range(m):
@@ -140,41 +135,13 @@ def _subspace_luts(Q: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
 
 def _residual_lut(r: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     """(m, ksub) residual ADC table for one (query − centroid) vector —
-    shared by :func:`_routed_query_luts` and :func:`_ivfpq_scores_numpy`
-    (same single-implementation contract as :func:`_subspace_luts`)."""
+    shared by :func:`_routed_query_luts` and :func:`_ivfpq_scores_numpy`,
+    so the kernel and its in-plan fallback score with one op sequence."""
     m, ksub, dsub = codebooks.shape
     t = np.empty((m, ksub))
     for j in range(m):
         t[j] = ((codebooks[j] - r[j * dsub : (j + 1) * dsub]) ** 2).sum(-1)
     return t
-
-
-def _query_luts(
-    queries: DataFrame, codebooks: np.ndarray, qvec_col: str = "query_vector"
-) -> DataFrame:
-    """(query_id, _luts): per-query ADC tables, luts[j][k] = ||q_subj -
-    codebook[j][k]||², built in one Arrow pass over the (tiny) query side.
-
-    Deliberately NOT a literal expression tree: m·ksub·dsub terms blow past
-    janino's method-size limits and fall out of codegen; a vectorized numpy
-    pass on the dim-sized query table costs nothing and keeps the BIG side
-    (the codes scan) pure built-in zip_with/aggregate codegen."""
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast(codebooks)
-
-    def lut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        B = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.stack(pdf[qvec_col].to_numpy()).astype(np.float64)
-            L = _subspace_luts(Q, B)
-            out = [list(L[qi]) for qi in range(len(Q))]
-            yield pd.DataFrame({"query_id": pdf["query_id"].to_numpy(), "_luts": out})
-
-    return queries.select("query_id", qvec_col).mapInPandas(
-        lut, schema="query_id long, _luts array<array<double>>"
-    )
 
 
 def pq_search(
@@ -183,37 +150,13 @@ def pq_search(
     codebooks: np.ndarray,
     k: int = 10,
     id_col: str = "vec_id",
-    impl: str = "expr",
 ) -> DataFrame:
-    """ADC top-k over PQ codes: distance = Σ_j luts[j][code_j]. The scan
-    never touches a float vector — only m small ints/row.
-
-    ``impl="expr"`` (default) evaluates the gather-sum as zip_with +
-    aggregate inside codegen — the exact-certified formulation
-    (pq_anchor_topk rides this shape under the hash gate). ``"numpy"``
-    is the Arrow/BLAS throughput kernel for the recall-checked members
-    (ivf/lsh precedent): one mapInPandas pass over the codes gathers all
-    queries' LUT rows per batch and emits ≤ Q·k candidates per scan
-    partition, so the global rank merges P·Q·k rows instead of N·Q. The
-    adds run in the same j-order as the expression fold and round with
-    the same half-up idiom, so the two paths agree row-for-row (pytest-
-    pinned)."""
-    if impl == "numpy":
-        scored = _pq_scores_numpy(codes, queries, codebooks, k, id_col)
-    else:
-        q = _query_luts(queries, codebooks)
-        scored = codes.join(F.broadcast(q), how="cross").select(
-            "query_id",
-            F.col(id_col).alias("block_id"),
-            F.round(
-                F.aggregate(
-                    F.zip_with("codes", "_luts", lambda c, l: F.element_at(l, c + 1)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("distance"),
-        )
+    """ADC top-k over PQ codes: distance = Σ_j luts[j][code_j], summed in
+    j-order from 0.0 and rounded half-up to 6 dp. The scan never touches
+    a float vector — only m small ints/row — and each scan partition
+    emits ≤ Q·k candidates (:func:`_pq_scores_numpy`), so the global rank
+    merges P·Q·k rows instead of N·Q."""
+    scored = _pq_scores_numpy(codes, queries, codebooks, k, id_col)
     w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("block_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -229,21 +172,21 @@ def _pq_scores_numpy(
     k: int,
     id_col: str,
 ) -> DataFrame:
-    """Stage-1 of the numpy ADC path: per scan-partition top-k candidates
+    """Stage 1 of :func:`pq_search`: per scan-partition top-k candidates
     for every query. LUTs build once on the driver (dim-sized query table,
     local_topk idiom) and broadcast; each Arrow batch gathers its codes'
     LUT entries for ALL queries at once (m fancy-index adds in C). The
     per-batch cut selects on ROUNDED distances with (distance, id) order —
     rounding half-up like Spark ROUND — so boundary ties survive to the
-    global merge exactly as the expression path's do."""
+    global merge."""
     spark = codes.sparkSession
     q_rows = queries.select("query_id", "query_vector").collect()
-    if not q_rows:  # expr path yields empty output on empty queries — match it
+    if not q_rows:
         return spark.createDataFrame([], "query_id long, block_id long, distance double")
     qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
     Q = np.stack([np.asarray(r["query_vector"], dtype=np.float64) for r in q_rows])
     m = codebooks.shape[0]
-    lut = _subspace_luts(Q, codebooks)  # the ONE LUT op sequence (_query_luts shares it)
+    lut = _subspace_luts(Q, codebooks)
     bc = spark.sparkContext.broadcast((qids, lut))
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -305,13 +248,10 @@ def pq_search_refined(
     expansion: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
     """PQ + refine (the standard two-stage ANN): ADC shortlist of
-    k·expansion candidates from the compressed codes, then EXACT L2 re-rank
-    of the shortlist against the float vectors. ``impl`` picks the ADC
-    scan kernel (see :func:`pq_search`); the re-rank is expression-exact
-    either way.
+    k·expansion candidates from the compressed codes (:func:`pq_search`),
+    then EXACT L2 re-rank of the shortlist against the float vectors.
 
     This is the 100 TB read pattern: the full scan touches only m-byte
     codes; float vectors are fetched for k·expansion rows per query — a
@@ -321,7 +261,7 @@ def pq_search_refined(
     from ..functions import vector as V
 
     shortlist = pq_search(
-        codes, queries, codebooks, k=k * expansion, id_col=id_col, impl=impl
+        codes, queries, codebooks, k=k * expansion, id_col=id_col
     ).select("query_id", id_col)
     qv = queries.select("query_id", "query_vector")
     rescored = (
@@ -457,6 +397,11 @@ def _routed_query_luts(
     )
 
 
+# Above this many bytes the residual LUT does not ride one broadcast
+# tensor: ivfpq_search scores in the plan instead (see _ivfpq_scores_numpy).
+_IVFPQ_LUT_BROADCAST_MAX = 256 << 20
+
+
 def ivfpq_search(
     codes: DataFrame,
     queries: DataFrame,
@@ -465,25 +410,24 @@ def ivfpq_search(
     k: int = 10,
     nprobe: int = 4,
     id_col: str = "vec_id",
-    impl: str = "expr",
 ) -> DataFrame:
-    """IVFADC top-k: the (query, probed list) LUTs broadcast-join the code
-    table on ``centroid_id`` — each code row is scored ONLY against queries
-    probing its list (partition pruning when the codes are laid out by
-    centroid_id), and the ADC sum stays a codegen'd zip_with/aggregate over
-    m ints. No float vector and no unprobed list is ever read.
+    """IVFADC top-k: each code row is scored ONLY against queries probing
+    its list (partition pruning when the codes are laid out by
+    centroid_id), with the ADC sum over m ints. No float vector and no
+    unprobed list is ever read.
 
-    ``impl="numpy"`` is the Arrow throughput kernel for the recall-checked
-    member (same pattern as :func:`pq_search`): residual LUTs build once on
-    the driver, each batch gathers LUT[q, list(row), j, code(row, j)] for
-    every query at once, unprobed (query, list) pairs mask to +inf and are
-    never emitted. Adds run in the fold's j-order, so the two paths agree
-    row-for-row (pytest-pinned)."""
-    if impl == "numpy":
-        scored = _ivfpq_scores_numpy(codes, queries, centroids, codebooks, k, nprobe, id_col)
-        if scored is None:  # LUT broadcast would exceed the size guard
-            impl = "expr"
-    if impl != "numpy":
+    The Arrow kernel (:func:`_ivfpq_scores_numpy`, same pattern as
+    :func:`pq_search`) builds the residual LUTs once on the driver, each
+    batch gathers LUT[q, list(row), j, code(row, j)] for every query at
+    once, unprobed (query, list) pairs mask to +inf and are never
+    emitted. When that LUT broadcast would pass
+    ``_IVFPQ_LUT_BROADCAST_MAX``, the (query, probed list) LUT rows
+    instead broadcast-join the code table on ``centroid_id`` and the sum
+    is a codegen'd zip_with/aggregate — same op sequence (the LUT rows
+    come from the same :func:`_residual_lut`, the adds run in j-order),
+    same rows."""
+    scored = _ivfpq_scores_numpy(codes, queries, centroids, codebooks, k, nprobe, id_col)
+    if scored is None:
         luts = _routed_query_luts(queries, centroids, codebooks, nprobe)
         scored = codes.join(F.broadcast(luts), "centroid_id").select(
             "query_id",
@@ -514,7 +458,7 @@ def _ivfpq_scores_numpy(
     nprobe: int,
     id_col: str,
 ) -> DataFrame | None:
-    """Stage-1 of the numpy IVFADC path. The residual LUT is SPARSE,
+    """Stage 1 of :func:`ivfpq_search`. The residual LUT is SPARSE,
     keyed by (query, probe slot): a (Q, nprobe, m, ksub) float64 array —
     the inherent payload, NOT the (Q, nlists, m, ksub) dense cube whose
     broadcast grows with nlists (~sqrt(N) in ivfpq callers) — plus a
@@ -522,14 +466,15 @@ def _ivfpq_scores_numpy(
     stays one fancy-index per subspace; unprobed (query, list) pairs mask
     to +inf and are never emitted. Probe order and LUT values reuse
     _routed_query_luts' exact op sequence, and the adds run in the same
-    j-order, so rows stay bit-identical to the expr path.
+    j-order, so rows are bit-identical to the in-plan fallback.
 
-    Returns None when even the sparse broadcast would exceed ~256 MB —
-    the caller falls back to ``impl='expr'`` (the LUT there rides the
-    broadcast join row-by-row instead of as one dense tensor)."""
+    Returns None when even the sparse broadcast would exceed
+    ``_IVFPQ_LUT_BROADCAST_MAX`` — the caller then scores in the plan
+    (the LUT rides the broadcast join row by row instead of as one dense
+    tensor)."""
     spark = codes.sparkSession
     q_rows = queries.select("query_id", "query_vector").collect()
-    if not q_rows:  # expr path yields empty output on empty queries — match it
+    if not q_rows:
         return spark.createDataFrame([], "query_id long, block_id long, distance double")
     qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
     Q = np.stack([np.asarray(r["query_vector"], dtype=np.float64) for r in q_rows])
@@ -538,7 +483,7 @@ def _ivfpq_scores_numpy(
     m, ksub = B.shape[0], B.shape[1]
     nlists = C.shape[0]
     n_q = len(qids)
-    if n_q * (nprobe * m * ksub * 8 + nlists * 4) > 256 << 20:
+    if n_q * (nprobe * m * ksub * 8 + nlists * 4) > _IVFPQ_LUT_BROADCAST_MAX:
         return None
     lut = np.zeros((n_q, nprobe, m, ksub))
     slot = np.full((n_q, nlists), -1, dtype=np.int32)
@@ -587,19 +532,17 @@ def ivfpq_search_refined(
     expansion: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
     """IVFADC + exact refine: ADC shortlist of k·expansion per query from
-    the probed lists, then exact L2 re-rank against the floats — the
-    standard beyond-RAM serving shape (scan bytes: m ints/vector over
-    nprobe/nlists of the corpus; float reads: k·expansion rows/query).
-    ``impl`` picks the ADC scan kernel (see :func:`ivfpq_search`); the
-    re-rank is expression-exact either way."""
+    the probed lists (:func:`ivfpq_search`), then exact L2 re-rank
+    against the floats — the standard beyond-RAM serving shape (scan
+    bytes: m ints/vector over nprobe/nlists of the corpus; float reads:
+    k·expansion rows/query)."""
     from ..functions import vector as V
 
     shortlist = ivfpq_search(
         codes, queries, centroids, codebooks, k=k * expansion, nprobe=nprobe,
-        id_col=id_col, impl=impl,
+        id_col=id_col,
     ).select("query_id", id_col)
     qv = queries.select("query_id", "query_vector")
     rescored = (

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from .knn import topk_per_query
+from ..sources import literal_df
 
 
 # ---------------------------------------------------------------------------
@@ -68,30 +68,25 @@ def recall_cost_curve(
     truth: DataFrame,
     k: int = 10,
     nprobes: list[int] | None = None,
-    metric: str = "l2",
-    impl: str = "expr",
 ) -> DataFrame:
     """Measure (nprobe, recall@k, avg rows scanned, scan fraction) for every
-    nprobe in one candidate scan + one window pass.
+    nprobe in one candidate scan + one window pass, under L2.
 
     ``truth`` is the exact top-k rank list (query_id, block_id) — typically
     ``knn.knn_topk_fast``; recall@k = |pred ∩ truth| / |truth| per query,
-    averaged (``common_function.py:1154`` definition). ``impl='numpy'``
-    (l2 only) swaps the Q·N scoring pass for the Arrow kernel pinned
-    row-identical to the expression fold (:func:`_pair_scores_numpy`).
+    averaged (``common_function.py:1154`` definition). The Q·N scoring
+    pass is the Arrow kernel :func:`_pair_scores`.
     """
-    if impl == "numpy" and metric != "l2":
-        raise ValueError("impl='numpy' supports metric='l2' only")
     spark = indexed_blocks.sparkSession
     nlists = len(centroids)
     nprobes = sorted(set(nprobes or range(1, nlists + 1)))
     max_np = min(max(nprobes), nlists)
 
-    probes = spark.createDataFrame(
+    probes = literal_df(
+        spark,
         _probe_ranks(queries, centroids, max_np),
         "query_id long, centroid_id int, probe_rank int",
     )
-    cand = indexed_blocks.join(F.broadcast(probes), "centroid_id")
 
     # Score each (query, candidate) ONCE at the widest setting — the
     # distance does not depend on nprobe — then PRE-CUT to the top-k per
@@ -100,25 +95,18 @@ def recall_cost_curve(
     # top-k's (same (distance, id) comparator), so the curve is
     # unchanged while the ladder explode runs over Q·nlists·k rows
     # instead of replicating the full Q·N candidate scan ~nlists/2×.
-    if impl == "numpy":
-        # pair-score the corpus ONCE per batch (vectors cross the Arrow
-        # boundary once, not once per (q, vec) row), carry centroid_id
-        # through, and attach each query's probe rank via the dim-sized
-        # broadcast — same rows as the expression path below
-        scored = (
-            _pair_scores_numpy(
-                indexed_blocks, queries, id_col="block_id", vec_col="vector",
-                carry_schema="centroid_id int",
-            )
-            .join(F.broadcast(probes), ["query_id", "centroid_id"])
-            .select("probe_rank", "query_id", "block_id", "distance")
+    # The corpus is pair-scored ONCE per batch (vectors cross the Arrow
+    # boundary once, not once per (q, vec) row) with centroid_id carried
+    # through; the inner join on the dim-sized probes keeps only the
+    # probed (query, list) pairs and attaches their probe rank.
+    scored = (
+        _pair_scores(
+            indexed_blocks, queries, id_col="block_id", vec_col="vector",
+            carry_schema="centroid_id int",
         )
-    else:
-        dist = {"l2": V.l2_distance, "cosine": V.cosine_distance, "ip": V.neg_inner_product}[metric]
-        scored = cand.join(F.broadcast(queries.select("query_id", "query_vector")), "query_id").select(
-            "probe_rank", "query_id", "block_id",
-            F.round(dist("vector", "query_vector"), 6).alias("distance"),
-        )
+        .join(F.broadcast(probes), ["query_id", "centroid_id"])
+        .select("probe_rank", "query_id", "block_id", "distance")
+    )
     wl = Window.partitionBy("query_id", "probe_rank").orderBy(
         F.col("distance").asc(), F.col("block_id").asc()
     )
@@ -153,7 +141,7 @@ def recall_cost_curve(
     ).groupBy("nprobe", "query_id").agg(F.count(F.lit(1)).alias("n_hit"))
     n_truth = truth.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_truth"))
     # every (nprobe, query) pair scores, including zero-hit ones
-    grid = spark.createDataFrame([(int(n),) for n in nprobes], "nprobe int").crossJoin(
+    grid = literal_df(spark, [(int(n),) for n in nprobes], "nprobe int").crossJoin(
         F.broadcast(n_truth)  # ladder × per-query truth counts: both dim-sized, broadcast the bigger
     )
     per_q = grid.join(F.broadcast(hits), ["nprobe", "query_id"], "left").select(
@@ -293,7 +281,8 @@ def scan_cost_points(
     nlists = len(centroids)
     nprobes = sorted(set(nprobes or range(1, nlists + 1)))
     max_np = min(max(nprobes), nlists)
-    probes = spark.createDataFrame(
+    probes = literal_df(
+        spark,
         _probe_ranks(queries, centroids, max_np),
         "query_id long, centroid_id int, probe_rank int",
     )
@@ -360,8 +349,6 @@ def tune_ivf(
     k: int = 10,
     target_recall: float = 0.9,
     nprobes: list[int] | None = None,
-    metric: str = "l2",
-    impl: str = "expr",
 ) -> dict:
     """End-to-end parameter pass: measure curve → fit recall + cost models →
     choose nprobe. Returns the ``save_parameter_to_json``-shaped dict
@@ -369,7 +356,6 @@ def tune_ivf(
     validation table."""
     curve = recall_cost_curve(
         indexed_blocks, queries, centroids, truth, k=k, nprobes=nprobes,
-        metric=metric, impl=impl,
     )
     rows = curve.collect()
     model = fit_recall_model([r["nprobe"] for r in rows], [r["recall_at_k"] for r in rows], topk=k)
@@ -389,26 +375,22 @@ def tune_ivf(
 # SQL-replayable curve (driver correctness gate)
 # ---------------------------------------------------------------------------
 
-def _pair_scores_numpy(
+def _pair_scores(
     df: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     carry_schema: str | None = None,
 ) -> DataFrame:
-    """All (query_id, id, distance) pairs via an Arrow kernel,
-    bit-identical to the expression path: the per-dim accumulation runs
-    in the SAME j-order as ``l2_distance``'s codegen fold ((0.0 + t0) ≡
-    t0 in IEEE, then elementwise adds in j-order, float64 throughout —
-    the r8 ADC-kernel contract from pq.py), then sqrt and the half-up
-    6-dp round Spark's ``F.round`` applies. Queries broadcast as one
-    (Q, d) matrix; each corpus batch emits its R×Q long-form rows, with
-    any ``carry_schema`` columns (e.g. ``"centroid_id int"``) repeated
-    per row so callers can attach probe ranks without a corpus-sized
-    re-join. The Q·N distance scan is the tuning curves' dominant cost
-    at scale — this kernel is the throughput path; the expression path
-    stays the oracle-replayable definition, pytest-pinned
-    row-identical."""
+    """All (query_id, id, 6-dp L2 distance) pairs via an Arrow kernel —
+    the Q·N scoring pass the tuning curves and their truths share. The
+    per-dim accumulation runs in ``V.l2_distance``'s j-order ((0.0 + t0) ≡
+    t0 in IEEE, then elementwise adds in j-order, float64 throughout),
+    then sqrt and the half-up 6-dp round Spark's ``F.round`` applies, so
+    the DuckDB oracle replays the values. Queries broadcast as one (Q, d)
+    matrix; each corpus batch emits its R×Q long-form rows, with any
+    ``carry_schema`` columns (e.g. ``"centroid_id int"``) repeated per row
+    so callers can attach probe ranks without a corpus-sized re-join."""
     import pandas as pd
 
     spark = df.sparkSession
@@ -451,34 +433,15 @@ def _pair_scores_numpy(
     return df.select(id_col, vec_col, *carry_cols).mapInPandas(part, schema=schema)
 
 
-def _pair_scores(embeddings: DataFrame, queries: DataFrame, impl: str) -> DataFrame:
-    """(query_id, vec_id, 6-dp L2 distance) for every pair — the ONE
-    scoring pass :func:`anchor_ivf_truth` and :func:`anchor_ivf_curve`
-    share. ``impl='expr'`` is the oracle-replayable codegen fold;
-    ``'numpy'`` the Arrow kernel pinned row-identical to it."""
-    if impl == "numpy":
-        return _pair_scores_numpy(embeddings, queries)
-    return (
-        embeddings.crossJoin(F.broadcast(queries.select("query_id", "query_vector")))
-        .select(
-            "query_id", "vec_id",
-            F.round(V.l2_distance("embedding", "query_vector"), 6).alias("distance"),
-        )
-    )
-
-
-def anchor_ivf_truth(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10, impl: str = "expr"
-) -> DataFrame:
+def anchor_ivf_truth(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact (query_id, vec_id) L2 top-k over the embedding table — the
     ground truth :func:`anchor_ivf_curve` scores its recall against,
     exposed so callers can compute it ONCE per corpus (it is
-    deterministic: 6-dp-rounded distances with id tie-breaks, the same
-    expression shape the DuckDB oracle replays). ``impl`` picks the
-    scoring kernel (see :func:`_pair_scores`)."""
+    deterministic: 6-dp-rounded distances from :func:`_pair_scores` with
+    id tie-breaks, the values the DuckDB oracle replays)."""
     wq = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("vec_id").asc())
     return (
-        _pair_scores(embeddings, queries, impl)
+        _pair_scores(embeddings, queries)
         .withColumn("rank", F.row_number().over(wq)).where(F.col("rank") <= k)
         .select("query_id", "vec_id")
     )
@@ -492,16 +455,13 @@ def anchor_ivf_curve(
     k: int = 10,
     nprobes: list[int] | None = None,
     truth: DataFrame | None = None,
-    impl: str = "expr",
 ) -> DataFrame:
     """The D9 (nprobe → recall@k, rows-scanned) curve with every step
     SQL-expressible, so the driver's DuckDB oracle replays the measurement
     end-to-end (parity: ``get_parameter.py:188`` — the reference measures
     its curve against a live index; the exact-oracle harness needs the
-    index construction itself to be deterministic arithmetic).
-    ``impl='numpy'`` swaps the dominant Q·N scoring pass for the Arrow
-    kernel pinned row-identical to the expression fold
-    (:func:`_pair_scores`) — same emitted curve, oracle still replays it.
+    index construction itself to be deterministic arithmetic). The
+    dominant Q·N scoring pass is the Arrow kernel :func:`_pair_scores`.
 
     ``truth`` optionally supplies the exact (query_id, vec_id) top-k
     ground truth (:func:`anchor_ivf_truth`) — it is deterministic per
@@ -570,7 +530,7 @@ def anchor_ivf_curve(
     # (probes is keyed (query_id, centroid_id) — every query ranks every
     # list, so the join is exact, not an expansion)
     cand = (
-        _pair_scores(embeddings, queries, impl)
+        _pair_scores(embeddings, queries)
         .join(F.broadcast(assign), "vec_id")
         .join(F.broadcast(probes), ["query_id", "centroid_id"])
         .select("query_id", "vec_id", "probe_rank", "distance")
@@ -611,7 +571,7 @@ def anchor_ivf_curve(
         F.count(F.lit(1)).alias("n_hit")
     )
     n_truth = truth.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_truth"))
-    grid = spark.createDataFrame([(int(n),) for n in nprobes], "nprobe int").crossJoin(
+    grid = literal_df(spark, [(int(n),) for n in nprobes], "nprobe int").crossJoin(
         F.broadcast(n_truth)  # ladder × per-query truth counts: both dim-sized, broadcast the bigger
     )
     recall = (
